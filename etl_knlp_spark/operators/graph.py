@@ -88,8 +88,8 @@ def connected_components(
 # Shared CTE chain: raw text → 3-gram shingles → exact-Jaccard edges
 # (≥ 0.7) → recursive transitive closure → (node, component). Both
 # cluster oracles append their own final SELECT; the near_dup_clusters
-# oracle string is byte-identical to its pre-factoring form (snapshot-
-# guarded), so no _STALE_SINCE bump.
+# oracle string is byte-identical to its pre-factoring form, so its
+# snapshot oracle_md5 (and staleness bar) did not move.
 _CLUSTER_CTE = """
     WITH RECURSIVE toks AS (
       SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS t

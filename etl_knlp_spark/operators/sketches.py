@@ -249,13 +249,6 @@ def kmv_sketch(keys: DataFrame, key_col: str, k: int = _KMV_K) -> DataFrame:
     )
 
 
-def _kmv_stats(sketch: DataFrame, n_exact: DataFrame) -> DataFrame:
-    """(theta, n_sk) scalar frame for a sketch + exact-count frame."""
-    return sketch.agg(
-        F.max("h").alias("theta"), F.count(F.lit(1)).alias("n_sk")
-    ).crossJoin(n_exact)
-
-
 @query(
     "theta_sketch_ops",
     oracle=f"""

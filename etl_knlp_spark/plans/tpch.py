@@ -43,11 +43,6 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..registry import query
 
-def _revenue():
-    # built lazily — a module-level Column would require an active
-    # SparkContext at import time, breaking sessionless queries() import
-    return F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
-
 
 def _rev_u():
     """Per-row revenue in EXACT 1e-4 dollar units (BIGINT).

@@ -53,19 +53,17 @@ def fn_semantic_md5(fn) -> str | None:
     docstrings stripped (comments never survive parsing) — shared by
     tools/snapshot_oracles.py and tests/test_registry_audit.py.
 
-    Why not raw source (the r6-r11 formulation): the stale-bump audit
-    exists to catch "what runs changed but the staleness bar didn't
-    move". Raw-source hashing conflated docstring/comment edits with
-    semantic edits, so a docstring-only change regenerated into
-    oracle_snapshot.json looked identical to a silent semantics change
-    (r11 ADVICE demonstrated the hole live with embedding_centroid /
-    lexical_diversity). Hashing the stripped AST makes the invariant
-    exact: fn_md5 moves IFF executable code moved, so any snapshot
-    fn_md5 diff now demands a `_STALE_SINCE` bump — no exemption
-    judgment calls. Decorator expressions, defaults, and nested
-    functions stay in the hash (they are executable; the r6
-    decorator-capture bug lived in one). None when source is
-    unavailable (shouldn't happen for module-level functions)."""
+    Why not raw source (the r6-r11 formulation): a changed fn_md5 moves
+    the query's staleness bar, so it must mean "what runs changed".
+    Raw-source hashing conflated docstring/comment edits with semantic
+    edits (r11 ADVICE demonstrated the hole live with
+    embedding_centroid / lexical_diversity). Hashing the stripped AST
+    makes the invariant exact: fn_md5 moves IFF executable code moved,
+    and a docstring-only edit invalidates no evidence. Decorator
+    expressions, defaults, and nested functions stay in the hash (they
+    are executable; the r6 decorator-capture bug lived in one). None
+    when source is unavailable (shouldn't happen for module-level
+    functions)."""
     import ast
     import hashlib
     import inspect
@@ -97,694 +95,39 @@ def fn_semantic_md5(fn) -> str | None:
 # come first. "Evidence" is deliberately strict (round-2 advisor finding):
 # only a hash_match==true row counts for an oracled query, and only a
 # non-ERR rows-only row counts for an oracle-less one — an ERR row or a
-# rows-only row for a query that HAS an oracle is not evidence. Evidence
-# recorded before a query's semantics/oracle changed is invalidated via
-# _STALE_SINCE.
-
-# name -> first round whose CORRECTNESS rows are still valid. Rows from
-# earlier rounds predate a semantics/oracle change and don't count.
-# Maintained by hand alongside any change to a query's output or oracle.
-_STALE_SINCE: dict[str, int] = {
-    # round 4 upgraded the rows-only check to an assertion-contract
-    # oracle (n_docs + exact exp(avg(ln)) + udaf_matches boolean).
-    "udaf_geomean": 4,
-    # round 5 added the explicit MAD>0 guard to both engines (round-4
-    # advisor finding) — the oracle string changed.
-    "mad_outlier": 5,
-    # round 5 made max_df_abs=64 the production default (the frac-only
-    # path measured 50x at the 10x probe) — pair set + oracle changed.
-    # ("dedup_ngram_jaccard" bar later moved 5 → 15: see the round-15
-    # block at the bottom of this dict.)
-    # round 5 upgraded the ANN + hashed-dedup families from rows-only
-    # to assertion-contract oracles — outputs changed shape entirely.
-    # (similarity_ivf/_pruned and similarity_pq bars later moved
-    # 5 → 14: see the round-14 ordered-mean block at the bottom of
-    # this dict.)
-    # (bar later moved 5 → 11: see the round-11 session-2 comment at
-    # the bottom of this dict — rhp_signatures became an Arrow matmul)
-    "similarity_ann_lsh": 11,
-    # (dedup_minhash/dedup_fuzzy bars later moved 5 → 16: see the
-    # round-16 shingle_jaccard_exact block at the bottom of this dict.)
-    # round 11: simhash_signatures rewritten to the bit-sliced 32-lane
-    # aggregation (1.7× at sf0.1; bit-identical signatures, equality-
-    # checked in-session and by test_simhash_deterministic) — function
-    # source changed, so the audit bar moves even though outputs and
-    # oracle are unchanged.
-    # (bar later moved 11 → 16: round-16 contract-signature
-    # checkpoint, see the shingle_jaccard_exact block below.)
-    # round 5 upgraded the last rows-only cohort: full oracles for
-    # near_dup_clusters (exact edges + recursive-CTE components),
-    # pack_sequences (recursive-CTE walk), udf_tokenize/udf_langid
-    # (RE2/SQL kernel mirrors); assertion contract for pagerank_links.
-    # (bar later moved 5 → 11: r11 session-2 — shingle_jaccard_exact
-    # gained the pair_budget pre-flight the cluster family passes,
-    # and connected_components lazily checkpoints its edge table so
-    # propagation rounds stop re-running the corpus join; outputs
-    # identical, sources changed. Same bump for the other cc/exact-
-    # join consumers below.)
-    # (near_dup_clusters bar later moved 11 → 16: round-16
-    # shingle_jaccard_exact block at the bottom of this dict.)
-    "pack_sequences": 5,
-    "udf_tokenize": 5,
-    "udf_langid": 5,
-    # (bar later moved 5 → 11: supplier node ids are now NEGATED out
-    # of the customer key space instead of +10^7-offset — the offset
-    # silently aliased customer 10,000,001 with supplier 1 at SF ≥ 67
-    # on BOTH engines; oracle string changed with it.)
-    "pagerank_links": 11,
-    # round 6 hardened kanon_release (sub-k '__other__' withheld,
-    # sentinel-collision escape); round 7 made the escape injective
-    # (values starting with '=' also escaped — ADVICE r6 #2), changing
-    # the oracle again.
-    "kanon_release": 7,
-    # round 7 localCheckpointed the confusion-cell table (the corpus
-    # was being scanned 3× and the langid UDF run 4× — one scan per
-    # aggregation branch); output identical, function source changed.
-    # (eval_prf_summary's bar from that change later moved 7 → 12 in
-    # the round-12 floor-form block at the bottom of this dict.)
-    # round 7 split the prefix join into the jaccard_prefix_pairs
-    # helper and added its pre-flight candidate-budget guard (refuses
-    # Σ prefix-df² over 2^31); round 8 session 4 then added the PPJoin
-    # positional filter between the prefix self-join and the gram-set
-    # verify (37% fewer candidates, 1.38× wall at sf0.1) — output
-    # provably identical both times, function source changed. (r9
-    # verdict: these were two duplicate dict keys, 7 then 8 — Python
-    # kept the stricter 8, but test_stale_since_has_no_duplicate_keys
-    # now guards the pattern mechanically.)
-    "dedup_jaccard_prefix": 8,
-    # round 7 (same session as registration): the oracle CTE chain
-    # gained the word column (bpe_tokenize shares it), then the merge
-    # stage was rebuilt as leftmost-iterated substitution after the
-    # hypothesis sweep showed non-overlapping replace pairs identical-
-    # symbol runs >= 5 differently than greedy BPE; no driver rows
-    # predate the changes but the audit bar is mechanical.
-    "bpe_train_merges": 7,
-    "bpe_tokenize": 7,
-    # round 7 review cleanup: both hybrid queries now share the
-    # semantic-branch/fusion tail (_rrf_fuse) and the oracle constant
-    # instead of a register-time dataclass-replace hack — outputs and
-    # oracle strings identical, function sources changed.
-    # (bars later moved 7 → 11: r11 session-2 review — the depth-20
-    # cuts in _rrf_fuse and the scan-path lexical leg moved from
-    # empty-partition-spec row_number windows, which single-partition-
-    # sort their full input, to orderBy+limit TakeOrderedAndProject
-    # with the rank attached over the survivors; identical rows and
-    # ranks under the same total orders. The scan path also shares
-    # _bm25_postings now.)
-    # (hybrid_retrieval_rrf/_pruned bars later moved 11 → 14: see the
-    # round-14 bm25 ordered-fold block at the bottom of this dict.)
-    # round 7 review: the completion-marker check inside bm25_pruned
-    # moved to the Hadoop FS API (non-local caller-owned paths);
-    # output unchanged, function source changed.
-    # (bar later moved 7 → 11: bm25_index_build builds its postings
-    # through the shared _bm25_postings constructor now — output
-    # identical, source changed; then 11 → 14, bottom of this dict.)
-    # round 8: incremental_minhash_screen's witness collapse rewritten
-    # from a rank window to giant-routed collect_list slices (2× at
-    # the 100×-density probe; giant buckets now keep 1 witness, not
-    # reps_per_bucket) — output identical at graded SFs, operator
-    # machinery changed.
-    "dedup_incremental_minhash": 8,
-    # round 8: winnow core extracted to winnow_fingerprints(docs) so
-    # the property suite drives the production plan (verdict #7) —
-    # output and oracle identical, function source changed.
-    "winnow_fingerprint": 8,
-    # round 8 (session 3, both still never-evidenced): unigram_train
-    # gained the pieces_in_vocab_ok contract column (post-prune
-    # re-segmentation review fix — oracle changed); the streaming
-    # screen's contract checkpoints its multi-consumed frames and
-    # run_band_index_stream cleans up its sink/checkpoint — output
-    # identical, function source changed.
-    "unigram_train": 8,
-    # (stream_dedup_minhash bar later moved 8 → 16: round-16
-    # shingle_jaccard_exact block at the bottom of this dict.)
-    # round 8 session 4 (all three registered this same session, no
-    # driver rows exist yet; bumped because their sources changed
-    # post-registration and the audit bar is mechanical): the suffix
-    # ladder's round join moved to _pair_round with a pinned merge
-    # hint (100×-probe OOM fix — output identical); the JL projection
-    # output exploded to scalar (vec_id, dim_j, coord) rows for the
-    # driver canonicalizer's no-naked-array rule (oracle changed).
-    "suffix_array": 8,
-    "suffix_lcp": 8,
-    "embedding_jl_projection": 8,
-    # round 8 session 4: both blocked name joins share
-    # _blocked_name_sides with its pre-flight pair budget (measured
-    # 100.9M-pair refusal on the 10× duplicated-parts probe) — output
-    # identical at graded SFs (guard inert), function sources changed.
-    "fuzzy_join_names": 8,
-    "jaro_winkler_names": 8,
-    # round 9 advice fixes (all four verified green at sf0.01 + sf0.1
-    # on arrival; bumped because outputs could differ from the buggy
-    # versions on boundary data even though graded-SF rows are
-    # identical): the histogram quantiles now filter refinement rounds
-    # with the same bucket expression they count with (boundary-float
-    # desync fix); mg_heavy_hitters emits a per-partition sentinel so
-    # tied-top-(k+1) partitions still contribute their pivot to D;
-    # mmr_rerank multiplies by the literal 0.3 both engines see;
-    # interval_overlap_join dedups on keys + interval endpoints.
-    # (bars later moved 9 → 11: the discrete-quantile helpers drop
-    # NULLs up front — Spark sorts NULLs first, so a nullable column
-    # corrupted the endgame rank; mg_heavy_hitters' summary build is
-    # now an incremental mapInPandas fold with bounded per-worker
-    # memory instead of a whole-partition applyInPandas keyed on
-    # spark_partition_id — contract columns verified at both SFs
-    # under default AND hostile layouts.)
-    # bars moved 11 → 15: the r15 hypothesis find — a refinement
-    # slice spanning one subnormal ulp underflowed width to 0.0
-    # (ANSI divide-by-zero; silent NULL bucket pre-ANSI), and a
-    # ±huge slice overflowed both width and the bucket numerator.
-    # Fixed with a value-grouped endgame + an exact midpoint-split
-    # round; graded-data results unchanged, but the helpers' code
-    # moved so the evidence bar moves with it.
-    "quantile_iterative": 15,
-    "token_weighted_quantile": 15,
-    "mg_heavy_hitters": 11,
-    "mmr_rerank": 9,
-    "join_interval_overlap": 9,
-    # round 9 (same session as registration, no driver rows yet; the
-    # audit bar is mechanical): k_core gained the pre-flight edge
-    # budget after the 25x-density probe OOMed an unguarded peel, then
-    # the empty-graph early return; ewma gained the symmetric
-    # NULL-value exclusion (oracle changed).
-    "kcore_users": 9,
-    "ewma_event_values": 9,
-    # round 9 session 2 (same session as registration, no driver rows
-    # yet): the final top-k of both moved from a global row_number
-    # window (single-partition sort — InferWindowGroupLimit skips
-    # empty partition specs) to orderBy+limit TakeOrderedAndProject
-    # with the rank attached over the survivors — output identical,
-    # function sources changed.
-    "pmi_collocations": 9,
-    "rake_keywords": 9,
-    # round 9 session 2 (same session as registration, no driver rows
-    # yet): the Wilson z literal gained explicit DOUBLE casts after
-    # the kneser_ney hash mismatch exposed Spark's decimal-literal
-    # parsing — oracle string changed; spearman_corr gained its
-    # pre-flight group-size budget after the 100× probe overflowed
-    # the exact quarter-rank sums mid-aggregate (output identical at
-    # graded SFs, guard inert there).
-    "ab_test_wilson": 9,
-    # round 10 (r9 ADVICE items 4+5): both rank-correlation kernels and
-    # their oracles now filter k IS NOT NULL symmetrically (np.sign over
-    # NaN-cast-to-int8 was undefined while the oracle CASE treated NULL
-    # comparisons as ties), and kendall_tau emits NULL tau_b when a
-    # stratum's values or keys are all tied (kernel if-check + oracle
-    # NULLIF) instead of kernel-NaN-vs-oracle-division divergence —
-    # guards inert on graded-SF data (k is never NULL there, no all-tied
-    # strata), but the oracle strings changed.
-    "spearman_corr": 10,
-    "kendall_tau": 10,
-    # round 11: tools/determinism_probe.py (layout-perturbation sweep)
-    # caught ROUND(SUM(double), 2) flipping a cent when a group's
-    # float sum lands on a half-cent boundary under a different
-    # partition combine order (q9 flipped live at sf0.001). The whole
-    # batch-analytics family — every money sum over corpus-
-    # proportional groups — now accumulates in exact integer units
-    # (cents / 1e-4 / 1e-6 per the addends' decimal granularity, the
-    # q11/q22 recipe generalized): outputs and oracles changed for
-    # all of these. Bounded-group sums (streaming windows, sessions,
-    # per-customer CTE demos) keep plain float sums — their error
-    # margin is ~10 orders under the half-cent boundary by
-    # construction (BASELINE.md round-11 note).
-    "q9_product_profit": 11,
-    # (q3/q5/q10 bars later moved 11 → 15: fact-left-deep join-tree
-    # rewrite, see the round-15 block at the bottom of this dict.)
-    "q6_forecast_revenue": 11,
-    "q7_nation_trade": 11,
-    "q8_market_share": 11,
-    "q14_promo_share": 11,
-    "q17_small_quantity": 11,
-    "q19_disjunctive_filter": 11,
-    "q15_top_supplier": 11,
-    "q1_pricing_summary": 11,
-    "groupby_agg": 11,
-    "conditional_agg": 11,
-    "sql_pipe_syntax": 11,
-    "recursive_cte": 11,
-    # round 11, session 2 (review hardening; outputs identical at
-    # graded SFs, verified by sweep): (a) the coarse-group integer-
-    # unit sums moved from BIGINT to DECIMAL(38,0) accumulation —
-    # per-group rows grow with the corpus, so BIGINT unit sums cross
-    # 9.2e18 inside the 100 TB posture (q1's 1e-6-unit charge near
-    # sf~100; q11's global total near sf~2e4) — oracle strings
-    # changed (CAST ... AS DOUBLE instead of the BIGINT narrowing)
-    # for the queries listed above plus q11; (b) the three remaining
-    # engine-side F.round(x*100) cents conversions aligned to the
-    # FLOOR(x*100+0.5) formula their oracles already used (q22,
-    # minmax_by, target_encode_loo — formula-identical on 2-decimal
-    # data, but the audit bar is mechanical).
-    "q11_revenue_concentration": 11,
-    "q22_idle_balances": 11,
-    "minmax_by": 11,
-    "target_encode_loo": 11,
-    # round 11, session 2 (review batch): funnel_steps moved from the
-    # first-touch shortcut (first_click > first_view — drops a user
-    # whose first click predates their first view even when a later
-    # click converts) to true staged ordered-funnel anchors on BOTH
-    # engines — OUTPUTS CHANGED. oov_rate's vocab cut and
-    # inverted_index's posting head moved off unbounded formulations
-    # (empty-spec window / collect_set buffer) to TakeOrdered + the
-    # repartition-once WindowGroupLimit idiom — outputs identical.
-    # pii_scrub's email class widened to the legal %+- characters and
-    # the phone pattern extracted to a shared _PHONE_RE (oracle
-    # string changed; the old class left 'jane.doe+spam@x.com'
-    # half-scrubbed on both engines identically). bm25_topk now
-    # builds postings via the shared _bm25_postings. The attribution
-    # pair joins gained the pre-flight candidate budget (inert at
-    # graded SFs, guard-tested).
-    "funnel_steps": 11,
-    # (oov_rate's r11 bar moved 11 → 12 in the round-12 floor-form
-    # block at the bottom of this dict.)
-    # skyline_parts' running max moved from an empty-partition-spec
-    # window (single-partition sort of the distinct-price table —
-    # the docstring's "range-partitions like any global sort" claim
-    # was false) to the two-phase distributed prefix max
-    # (deterministic equal-width buckets, bounded driver carry sync,
-    # partitioned within-bucket window) — output identical at all
-    # SFs + hostile probes, source changed.
-    "skyline_parts": 11,
-    # r11 session-2 review batch, continued (all verified at three
-    # SFs or per their contract): target_encode_loo widens its cent
-    # sums to DECIMAL before the *10^4 (ANSI overflow inside the
-    # 100 TB posture while the HUGEINT oracle sailed on); minmax_by's
-    # arg-max packing multiplier is now data-derived and HUGEINT/
-    # decimal-wide (the hard-coded 10^7 BIGINT collided at SF ≥ 67 on
-    # both engines identically); quality_threshold_sweep accumulates
-    # quality mass as exact 1e-9 units in DECIMAL (oracle mirrors the
-    # quantization); theilsen_trend gained the per-type series-length
-    # budget; cms_heavy_hitters checkpoints its token stream (three
-    # consumers re-ran the scan); the cluster family and
-    # entity_golden_record inherit the connected_components edge
-    # checkpoint and the exact-join pair budget.
-    # (near_dup_clusters_star/dedup_keep_best bars later moved
-    # 11 → 16: round-16 shingle_jaccard_exact block below.)
-    "entity_golden_record": 11,
-    "cms_heavy_hitters": 11,
-    "theilsen_trend": 11,
-    # (quality_threshold_sweep's r11 bar moved 11 → 12 in the
-    # round-12 floor-form block at the bottom of this dict.)
-    "inverted_index": 11,
-    "pii_scrub": 11,
-    # (bm25_topk's r11 bar moved 11 → 14 in the round-14 bm25
-    # ordered-fold block at the bottom of this dict.)
-    "attribution_last_touch": 11,
-    "attribution_time_decay": 11,
-    # round 11, session 2: rhp_signatures rewritten from the
-    # posexplode → plane-join → chained-aggregate formulation to an
-    # Arrow matmul kernel (3.3× at sf0.1, no shuffle at all;
-    # signatures bit-identical on the graded corpus) — the only
-    # registered consumer is the ANN-LSH contract (the dedup overflow
-    # route never fires at graded block sizes); outputs verified
-    # identical at all three SFs plus the hostile-layout probe, but
-    # the function source changed so the audit bar moved: the
-    # similarity_ann_lsh entry ABOVE (r5 block) now reads 11.
-    #
-    # round 12: exact-integer-ratio outputs move from ROUND(x, k) to
-    # FLOOR(x*10^k + 0.5)/10^k on BOTH engines. The ratio doubles are
-    # bit-identical across engines (integer numerator/denominator,
-    # one correctly-rounded division), but ROUND itself can disagree
-    # when the exact rational terminates at the (k+1)th decimal with
-    # digit 5 — measured: 5 of 439 such rationals split DuckDB's
-    # multiply-based round from Spark's BigDecimal round (incl.
-    # 333/640 = 0.5203125, the documented percent_rank case), while
-    # the floor form agrees on all 2439 probe cases. Outputs can
-    # differ from the old form by 1e-6 exactly at those halves, so
-    # all prior evidence is invalidated. Only the queries inside the
-    # r12 sweep window convert this round (fresh driver rows land
-    # immediately, and the r5-staleness cohort keeps its 39 window
-    # slots — 2 unevidenced + 8 here + 39 = 49 ≤ 50). Of the ten
-    # int-ratio ROUND sites that remained after this first wave,
-    # seven (eval_prf_summary, lexical_diversity, ndcg_retrieval_eval,
-    # benford_digits, readability_flesch, oov_rate,
-    # quality_threshold_sweep) were converted in the SECOND-wave block
-    # below in this same round, and the other three (grouped_map_zscore,
-    # scalar_subquery, doc_quality_filter) were reclassified as
-    # continuous-by-construction (stddev/float-mean denominators) in
-    # the rounded-ratio audit's ALLOWED tier — tracked by
-    # tests/test_registry_audit.py's rounded-ratio audit, which since
-    # r13 scans BOTH the oracle SQL and the Spark function source.
-    "corpus_mixture_weights": 12,
-    "source_overlap": 12,
-    "dedup_containment": 12,
-    "langid_confusion": 12,
-    "markov_transitions": 12,
-    "column_drift": 12,
-    "skew_report": 12,
-    "perplexity_threshold_sweep": 12,
-    # round 12 review: url_canonical_dedup deleted ALL port syntax
-    # while claiming default-port stripping (mirrored overclaim —
-    # example.com:8080 merged with example.com on both engines).
-    # Ports now strip only when scheme-default, and the taint's
-    # fourth variant moved :443 → :8443 to exercise preservation on
-    # graded data — outputs changed (the :8443 variants are their own
-    # canonical groups now).
-    "url_canonical_dedup": 12,
-    # round 12, second wave: the REMAINING exact-ratio ROUND sites
-    # converted to the floor form (same rationale as the first wave
-    # above; the sweep math still holds — 17 unevidenced + the full
-    # 32-query r5 cohort = 49 ≤ 50 window slots, so the staleness
-    # debt clearance is untouched). benford_digits converts only its
-    # observed_p leg (the log10 leg is irrational-valued — ROUND is
-    # safe and stays); eval_prf/readability compose multiple exact
-    # ratios, all floor-form now.
-    "oov_rate": 12,
-    "lexical_diversity": 12,
-    "eval_prf_summary": 12,
-    "quality_threshold_sweep": 12,
-    "benford_digits": 12,
-    "readability_flesch": 12,
-    # ndcg's ROUND(s, 6) is internal but RANK-DECIDING (an exact-
-    # rational bm25-style score): a terminating-half landing could
-    # order the run differently per engine — converted with the wave.
-    "ndcg_retrieval_eval": 12,
-    # round 13: the codec/flac family — ROUND(mean of ≤64 integer
-    # codepoints, 4) on both engines — converted to the floor form
-    # (the exact-ratio tier's final members; every current graded
-    # half-landing is dyadic-width so outputs are unchanged TODAY,
-    # but a testdata regeneration could mint a non-dyadic half — the
-    # r12 verdict's "one regeneration away from a silent red").
-    # multimodal_flac (list_sum/GREATEST shape) and theta_sketch_ops
-    # ((k-1)/theta over a dyadic hash rational; its own docstring
-    # declares the exact-rational estimator) were caught by the r13
-    # audit widening — the r12 marker list (COUNT/1.0/AVG) missed
-    # their SUM- and hash-denominator shapes.
-    "multimodal_decode": 13,
-    "multimodal_webp": 13,
-    "multimodal_gif": 13,
-    "multimodal_bmp": 13,
-    "multimodal_tiff": 13,
-    "multimodal_flac": 13,
-    "theta_sketch_ops": 13,
-    # round 14 (r13 verdict latent item #2): Lloyd's TRAINING means in
-    # ivf.kmeans_fit / pq.pq_train moved from F.avg (a shuffle-arrival-
-    # order float fold) to `_ordered_mean` (sum in ascending vec_id
-    # order / count) — codebooks are now bit-identical across layouts
-    # (pinned by tests/test_pq.py::
-    # test_training_codebooks_are_layout_independent, which fails on
-    # the old trainers with AQE off). Registered outputs are recall-
-    # contract booleans and did not change on graded data, but the
-    # codebook doubles the helpers produce CAN differ in the last ulp
-    # from the old fold, so prior evidence is conservatively
-    # invalidated (helper-level change — fn_md5 of the registered
-    # functions is blind to it, which is exactly why the bump is by
-    # hand).
-    "similarity_ivf": 14,
-    "similarity_ivf_pruned": 14,
-    "similarity_pq": 14,
-    "similarity_pq_pruned": 14,
-    # round 14 review finding (the ADC class, one more site):
-    # _bm25_scored's per-doc score was F.sum(idf·tf_sat) — a layout-
-    # order float fold over the |Q| per-term contributions feeding
-    # ROUND(s, 6) and the (bm25 desc, doc_id) top-k cut. Converted to
-    # `_ordered_sum("term", contrib)` (buffer ≤ |Q| = 3 rows); the
-    # oracle mirrors with SUM(... ORDER BY tf.term), so the oracle
-    # strings changed too. ln()'s cross-engine ULP drift remains
-    # absorbed by the 1e-6 round, unchanged.
-    # (the r14 bar for the four bm25/hybrid entries moved 14 → 15:
-    # see the round-15 block below.)
-    # round 15 (optimization round): plan-shape rewrites, outputs and
-    # oracles unchanged — the dedup_simhash r11 precedent. The
-    # rounding/ordering-sensitive surfaces moved, so prior evidence
-    # is conservatively invalidated:
-    # - dedup_ngram_jaccard: helper ngram_jaccard_pairs re-keys the
-    #   pair join's streamed side (fan-out parallelism; fn_md5 of the
-    #   registered query is blind to helper changes — hand bump).
-    # - bm25_topk / hybrid_retrieval_rrf: scan path now scores via
-    #   _bm25_scored_scan (map-side per-term counts, fused stats+df
-    #   broadcast, zero postings shuffles; sorted-term in-expression
-    #   fold replaces _ordered_sum — bit-identical by the +0.0
-    #   identity, see _bm25_scored_scan's docstring).
-    # - bm25_pruned / hybrid_retrieval_rrf_pruned: probe path's
-    #   contribution expression refactored into the shared
-    #   _bm25_contrib (same math, same FP order; helper-level change,
-    #   hand bump like the r14 ivf block above).
-    #   (dedup_ngram_jaccard's r15 bar moved 15 → 16: see the
-    #   round-16 block below.)
-    "bm25_topk": 15,
-    "bm25_pruned": 15,
-    "hybrid_retrieval_rrf": 15,
-    "hybrid_retrieval_rrf_pruned": 15,
-    # - q3/q5/q10: join trees rewritten fact-left-deep (lineitem
-    #   streams, dims build — guide §3.1; the old dim-first trees
-    #   broadcast the fact table locally). Inner-join reorder only;
-    #   outputs and oracles unchanged, integer-unit revenue sums
-    #   untouched (bars move 11 → 15).
-    "q3_shipping_priority": 15,
-    "q10_returned_items": 15,
-    # round 16: helper ngram_jaccard_pairs materializes the per-doc
-    # size table once (lazy localCheckpoint) instead of aggregating
-    # the posting stream separately under each decoration join —
-    # plan shape only, exact integer counts, output bit-identical
-    # (oracle green at sf0.01/sf0.1, hostile-layout probe green).
-    # fn_md5 of the registered query is blind to helper changes —
-    # hand bump per the r14 ivf precedent (bar moves 15 → 16).
-    "dedup_ngram_jaccard": 16,
-    # round 16: helper shingle_jaccard_exact checkpoints its posting
-    # stream and size table (they fed four consumers, each re-running
-    # scan → shingle → explode; A/B 23.2 → 12.2 s at sf0.1).
-    # Materialization only — the verifier keeps its deliberately
-    # LSH-independent posting-join formulation and its exact integer
-    # counts; outputs bit-identical, oracles green at sf0.01 (all
-    # six consumers) and sf0.1 (the heavy three). Hand bump for every
-    # registered consumer of the helper.
-    "dedup_minhash": 16,
-    "dedup_fuzzy": 16,
-    "near_dup_clusters": 16,
-    "near_dup_clusters_star": 16,
-    "dedup_keep_best": 16,
-    "stream_dedup_minhash": 16,
-    # round 16: the dedup_simhash contract checkpoints its signature
-    # table (six consumers re-ran the doubled-corpus signature build;
-    # A/B 3.40 → 2.82 s at sf0.01, wash at sf0.1 — kept on the
-    # corpus-scale pass count). Contract booleans and count
-    # unchanged; oracle green at sf0.01/sf0.1.
-    "dedup_simhash": 16,
-    # round 16: item_cf_cosine checkpoints its basket table (fed the
-    # pre-flight, per-item counts and both pair-join sides) and the
-    # budget-bounded pair aggregate (the union doubled it). A/B
-    # 3.21 → 2.70 s at sf0.01, 8.07 → 7.34 s at sf0.1; outputs
-    # bit-identical, oracle green at both SFs.
-    "item_cf_cosine": 16,
-    # round 16 (optimization round 2): q5's build side pinned with an
-    # explicit F.broadcast(dims) (r15 verdict #1 — the join order
-    # alone left the pruned fact table under the 32 MB auto-broadcast
-    # threshold, so the planner still broadcast lineitem). Hint only;
-    # output, oracle and the integer-unit revenue fold unchanged
-    # (bar moves 15 → 16).
-    "q5_nation_volume": 16,
-    # round 16: the stream-stream join harnesses run under the RocksDB
-    # provider with join stateFormatVersion 3 (virtual column families
-    # — 4 state stores per partition folded into 1; see
-    # streaming/joins.py:_join_state_backend for the lock-contention
-    # profile and A/B). State layout only; join semantics, outputs and
-    # oracles unchanged (bars move 10 → 16).
-    "stream_stream_join": 16,
-    "stream_stream_outer_join": 16,
-    # - q1_dimension_build: trailing DISTINCT elided (provably
-    #   redundant after the pre-join distinct + 1:1 PK joins; oracle
-    #   keeps SELECT DISTINCT as the loud backstop). Output multiset
-    #   verified identical at sf0.001/0.01/0.1; already sweep-pinned
-    #   for r15 (verdict item #1), so the bar moves with it.
-    "q1_dimension_build": 15,
-}
-
-# Names that must reach the driver's next sweep ahead of everything
-# else: name -> round N, meaning "outrank ALL other tiers until a
-# valid green row at round >= N exists". Entries are SELF-PRUNING —
-# once the driver lands the demanded row, the entry deactivates and
-# the query rejoins the normal stalest-first rotation (no r11 edit
-# needed for the entry to stop hogging the window; stale comments can
-# be cleaned up at leisure). Insertion order IS the priority order
-# within the tier (dicts preserve it; the 50-query window cuts the
-# list wherever the budget runs out, and the cut tail simply fronts
-# the NEXT round's window).
+# rows-only row for a query that HAS an oracle is not evidence.
 #
-# Round 10 (r9 verdict #1 + #6): the entire window goes to the
-# evidence-latency debt — the 62 queries whose freshest driver row is
-# round 3/4. The stalest-first rotation already fronts most of these;
-# the explicit entries pin the cohort against surprises (an
-# environment-epoch flip or a mid-session invalidation reshuffling the
-# order) and let us curate WHO waits when 64 candidates meet 50 slots
-# (the 9 TPC-H pure-SQL shapes and the layout tail wait — lowest
-# re-verification risk — rather than the streaming cohort or the
-# flagship). Demanded round for the round-10 cohort: 10; the six
-# entries appended at the tail demand 11 (the round-11 integer-unit
-# rewrite invalidated their older rows — see their own comment).
+# Rows older than a query's staleness bar don't count. The bar is
+# derived, never kept by hand; it is the later of two rounds:
 #
-# STEADY-STATE POLICY (r10 verdict #3): once every entry below has
-# self-pruned (its demanded round's evidence landed), the rotation is
-# a PURE oldest-evidence-first cycle over all 300 queries — 50 slots
-# per round means every query is re-swept within ceil(300/50) = 6
-# rounds, so max evidence staleness is bounded at 6 by construction.
-# tests/test_registry_audit.py::test_steady_state_window_is_the_stalest_50
-# and ::test_rotation_staleness_bounded_by_six_rounds pin both halves;
-# tools/evidence_report.py prints the simulated bound each run. This
-# dict should receive NO new entries in steady state — a priority pin
-# is only for evidence invalidated by a semantics fix (pair it with a
-# `_STALE_SINCE` bump), an environment-epoch flip, or the FLAGSHIP
-# (r13 verdict #4: `entry()` ≡ q1_dimension_build smoke-runs every
-# round but hash-checks only in rotation, so a periodic flagship pin
-# keeps its hash evidence from aging toward the rotation bound).
-_SWEEP_PRIORITY: dict[str, int] = {
-    # -- invalidated this round (r9 ADVICE fixes; no valid rows left) --
-    "kendall_tau": 10,
-    "spearman_corr": 10,
-    # -- freshest evidence round 3 --
-    "approx_percentile_sketch": 10,
-    "layout_bucketed_join": 10,
-    "layout_zorder": 10,
-    "time_travel_read": 10,
-    "compact_small_files": 10,
-    "q6_forecast_revenue": 10,
-    "q18_large_orders": 10,
-    "q4_priority_check": 10,
-    "q7_nation_trade": 10,
-    "q12_late_priority": 10,
-    "q13_order_distribution": 10,
-    "q14_promo_share": 10,
-    "q17_small_quantity": 10,
-    "q19_disjunctive_filter": 10,
-    "q21_waiting_suppliers": 10,
-    # -- the flagship (r9 verdict #6: entry() smoke runs every round
-    #    but is not hash-checked; its freshest hash row was r4 then).
-    #    r14 (r13 verdict #4): the flagship re-pin is DEFERRED to the
-    #    round-15 session — the verdict offered "r14 or r15", and the
-    #    new window-math pre-check (tools/evidence_report.py, verdict
-    #    #5) shows r14's mandatory demand is already exactly 50
-    #    without it: 8 review-invalidated queries (4 ANN ordered-mean
-    #    + 4 bm25 ordered-fold) + the 42-query owed r6/r7 tier. A pin
-    #    activates the moment it exists (demand round only controls
-    #    self-pruning), so adding `"q1_dimension_build": 15` now would
-    #    displace `warc_roundtrip` past the staleness bound — the
-    #    exact r13 failure the pre-check was built to prevent. The
-    #    r15 session adds the entry first thing; r15's projected owed
-    #    tier is the 36-query r8 cohort, leaving 13 slots of slack. --
-    # -- r15 (r14 verdict #1): the deferred flagship hash re-pin,
-    #    added FIRST THING this round as committed. Pre-check after
-    #    adding: 1 pin + 36 overdue = 37 mandatory vs 50 -> overrun 0.
-    #    Deactivates itself once a >=r15 hash row lands. --
-    "q1_dimension_build": 15,
-    # -- freshest evidence round 4: SURVEY-§2 table rows + streaming --
-    "udaf_geomean": 10,
-    "stream_dedup_watermark": 10,
-    "stream_stateful_totals": 10,
-    "cdc_merge": 10,
-    "stream_stream_join": 10,
-    "stream_stream_outer_join": 10,
-    "stream_static_enrich": 10,
-    "stream_topk_trending": 10,
-    "rollup_hierarchical_time": 10,
-    "recursive_cte": 10,
-    # -- freshest evidence round 4: the rest, registration order --
-    "pii_scrub": 10,
-    "ngram_freq": 10,
-    "embedding_centroid": 10,
-    "doc_quality_filter": 10,
-    "token_histogram": 10,
-    "cogrouped_map_enrich": 10,
-    "sessionize_batch": 10,
-    "attribution_last_touch": 10,
-    "timeseries_gapfill": 10,
-    "multimodal_resize": 10,
-    "ivm_aggregate": 10,
-    "join_full_outer": 10,
-    "except_all_rows": 10,
-    "intersect_all_rows": 10,
-    "sample_reservoir": 10,
-    "bitmap_distinct": 10,
-    "html_strip": 10,
-    "text_normalize": 10,
-    "url_domain_counts": 10,
-    "shuffle_shard": 10,
-    "map_ops": 10,
-    "agg_skew_salted": 10,
-    "lateral_join": 10,
-    # -- the cut tail (waits for r11's window if the budget runs out
-    #    here; all pure-plan shapes with the lowest re-verify risk) --
-    "layout_partition_prune": 10,
-    "scan_agg_pushdown": 10,
-    "layout_dpp_join": 10,
-    "runtime_bloom_join": 10,
-    "q22_idle_balances": 10,
-    "q1_pricing_summary": 10,
-    "q2_min_cost_supplier": 10,
-    "q8_market_share": 10,
-    "q9_product_profit": 10,
-    "q11_revenue_concentration": 10,
-    "q15_top_supplier": 10,
-    "q16_supplier_part_types": 10,
-    "q20_excess_suppliers": 10,
-    # -- round 11: the exact-integer-unit determinism fix invalidated
-    #    these six on top of entries above (whose stale bars moved to
-    #    11; an entry demanding r10 stays active until an r11+ row
-    #    lands, since the stale bar filters older rows first) --
-    "q3_shipping_priority": 11,
-    "q5_nation_volume": 11,
-    "q10_returned_items": 11,
-    "groupby_agg": 11,
-    "conditional_agg": 11,
-    "sql_pipe_syntax": 11,
-    # round 11 session 2: the review batch invalidated more evidence
-    # than tier-2 ordering can fit ahead of this dict's r4-evidenced
-    # entries (44 unevidenced vs 50 slots — the audit's
-    # no-unevidenced-outside-the-window rule tripped). Pin the two
-    # that spilled; the displaced slots land on r4-EVIDENCED entries
-    # above, which legally front the r12 window instead (paired with
-    # their _STALE_SINCE 11 bumps per the steady-state policy).
-    "theilsen_trend": 11,
-    "target_encode_loo": 11,
-    "token_weighted_quantile": 11,
-    "skyline_parts": 11,
-    "quantile_iterative": 11,
-    "quality_threshold_sweep": 11,
-    "cms_heavy_hitters": 11,
-    "entity_golden_record": 11,
-    # ... and the rest of the session's invalidated set — with 44
-    # unevidenced queries vs 50 slots, the complete cohort pins ahead
-    # and the displaced entries are r4-EVIDENCED rows from the r10
-    # cohort above, which legally front the r12 window (their
-    # staleness stays bounded by the rotation policy; the
-    # no-unevidenced-outside-the-window audit is the binding rule).
-    "inverted_index": 11,
-    "bm25_topk": 11,
-    "bm25_pruned": 11,
-    "oov_rate": 11,
-    "hybrid_retrieval_rrf": 11,
-    "hybrid_retrieval_rrf_pruned": 11,
-    "dedup_simhash": 11,
-    "funnel_steps": 11,
-    "attribution_time_decay": 11,
-    "near_dup_clusters": 11,
-    "pagerank_links": 11,
-    "dedup_keep_best": 11,
-    "near_dup_clusters_star": 11,
-    "similarity_ann_lsh": 11,
-    "mg_heavy_hitters": 11,
-    "minmax_by": 11,
-}
+# - `stale_since` in `oracle_snapshot.json`: the round the query's
+#   function or oracle last changed. tools/snapshot_oracles.py is its
+#   only writer — regenerating after an edit moves the bar of every
+#   query whose fn_md5 or oracle_md5 changed to `_next_round()`.
+# - the environment epoch of every table the query reads. A testdata
+#   regeneration flipping a physical type (e.g. the r4 events
+#   TIMESTAMP(NANOS)→TIMESTAMP(MICROS) flip) also de-values old green
+#   rows, and nobody edits the repo when the driver regenerates
+#   parquet. `table_fingerprints.json` records, per table, the pyarrow
+#   schema fingerprint last reconciled and the round it became current
+#   (its epoch). At sweep time the live testdata is re-fingerprinted; a
+#   mismatch puts the table's epoch at `_next_round()` (all existing
+#   rows invalid) until `tools/update_epochs.py` reconciles the file.
 
-# Priority order within the tier = dict insertion order.
-_PRIORITY_INDEX: dict[str, int] = {n: i for i, n in enumerate(_SWEEP_PRIORITY)}
-
-# --- Environment-epoch staleness (round-5 verdict "Next round #2") ---
-#
-# `_STALE_SINCE` covers *semantics/oracle* changes, which are made by
-# hand alongside the change itself. But driver-side *environment*
-# changes (a testdata regeneration flipping a physical type, e.g. the
-# r4 events TIMESTAMP(NANOS)→TIMESTAMP(MICROS) flip) also de-value old
-# green rows — and nobody edits this file when the driver regenerates
-# parquet. So the staleness bar for environment drift is COMPUTED:
-# `table_fingerprints.json` records, per table, the pyarrow schema
-# fingerprint last reconciled and the round at which that fingerprint
-# became current (its epoch). At sweep time we re-fingerprint the live
-# testdata; a mismatch means the environment changed since the last
-# reconcile, and every query whose oracle touches that table is treated
-# as stale since the *next* round (all existing rows invalid). Running
-# `tools/update_epochs.py` reconciles the file after a detected drift.
-
+_SNAPSHOT_PATH = __file__.replace("registry.py", "oracle_snapshot.json")
 _FINGERPRINTS_PATH = __file__.replace("registry.py", "table_fingerprints.json")
 _SWEEP_SF_DIR = "/root/testdata/sf0.01"  # the driver's correctness SF
+
+
+def _read_json(path: str) -> dict:
+    """A committed ledger file; {} if missing or unreadable (never crash)."""
+    import json
+
+    try:
+        with open(path) as f:
+            return json.load(f)
+    except (OSError, ValueError):
+        return {}
 
 
 def _live_fingerprint(sf_dir: str, table: str) -> str | None:
@@ -808,35 +151,20 @@ def _live_fingerprint(sf_dir: str, table: str) -> str | None:
 def _environment_epochs(
     sf_dir: str | None = None, fingerprints_path: str | None = None
 ) -> dict[str, int]:
-    """table -> first round whose driver rows are still valid.
-
-    Recorded epoch when the live schema matches the reconciled
-    fingerprint; (max recorded CORRECTNESS round + 1) when it doesn't —
-    i.e. an unreconciled drift invalidates ALL existing evidence for
-    queries touching that table, pushing them to the sweep head.
-    """
-    import json
-
+    """table -> first round whose driver rows are still valid: the
+    recorded epoch when the live schema matches the reconciled
+    fingerprint, `_next_round()` when it doesn't."""
     sf_dir = sf_dir or _SWEEP_SF_DIR
     # Resolved at call time (not def time) so tests can monkeypatch the
     # module attribute to simulate a drift.
-    fingerprints_path = fingerprints_path or _FINGERPRINTS_PATH
-    try:
-        with open(fingerprints_path) as f:
-            recorded = json.load(f)
-    except (OSError, ValueError):
-        recorded = {}
-    drift_epoch = None  # computed lazily: max CORRECTNESS round + 1
+    recorded = _read_json(fingerprints_path or _FINGERPRINTS_PATH)
     out: dict[str, int] = {}
     for table, entry in recorded.items():
         live = _live_fingerprint(sf_dir, table)
         if live is None or live == entry["fingerprint"]:
             out[table] = entry["epoch"]
         else:
-            if drift_epoch is None:
-                rounds = [r for rows in _evidence_rounds().values() for r, _ in rows]
-                drift_epoch = max(rounds, default=0) + 1
-            out[table] = drift_epoch
+            out[table] = _next_round()
     return out
 
 
@@ -861,7 +189,6 @@ def _tables_of(rq: "RegisteredQuery") -> frozenset[str]:
 def _evidence_rounds() -> dict[str, list[tuple[int, dict]]]:
     """name -> [(round, entry), ...] across all CORRECTNESS_r*.json files."""
     import glob
-    import json
     import os
     import re
 
@@ -870,52 +197,68 @@ def _evidence_rounds() -> dict[str, list[tuple[int, dict]]]:
     for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
         m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
         rnd = int(m.group(1)) if m else 0
-        try:
-            with open(path) as f:
-                data = json.load(f)
-        except (OSError, ValueError):
-            continue
-        for name, entry in data.items():
+        for name, entry in _read_json(path).items():
             if isinstance(entry, dict):
                 out.setdefault(name, []).append((rnd, entry))
     return out
 
 
+def _next_round() -> int:
+    """The round after the newest recorded CORRECTNESS row — where a
+    staleness bar moves when evidence is invalidated now."""
+    rounds = [r for rows in _evidence_rounds().values() for r, _ in rows]
+    return max(rounds, default=0) + 1
+
+
+def _staleness_bars() -> dict[str, int]:
+    """name -> first round whose CORRECTNESS rows still count: the later
+    of the snapshot's `stale_since` (0 for a name it lacks) and the
+    environment epoch of every table the query reads."""
+    snapshot = _read_json(_SNAPSHOT_PATH)
+    env_epochs = _environment_epochs()
+    return {
+        n: max(
+            [snapshot.get(n, {}).get("stale_since", 0)]
+            + [env_epochs.get(t, 0) for t in _tables_of(rq)]
+        )
+        for n, rq in _REGISTRY.items()
+    }
+
+
+def _current_rows(
+    name: str, evidence: dict[str, list[tuple[int, dict]]], bars: dict[str, int]
+) -> list[tuple[int, bool]]:
+    """(round, counts-as-evidence) for each of `name`'s CORRECTNESS rows
+    at or after its staleness bar — the one evidence-validity rule,
+    shared by the sweep order and tools/evidence_report.py."""
+    has_oracle = _REGISTRY[name].oracle is not None
+    return [
+        (
+            r,
+            e.get("hash_match") is True
+            if has_oracle
+            else e.get("err") == "no_oracle" and e.get("spark_rows") is not None,
+        )
+        for r, e in evidence.get(name, [])
+        if r >= bars[name]
+    ]
+
+
 def _sweep_order() -> list[str]:
     evidence = _evidence_rounds()
-    env_epochs = _environment_epochs()
+    bars = _staleness_bars()
 
     def key(n: str) -> tuple[int, int]:
-        min_round = _STALE_SINCE.get(n, 0)
-        for table in _tables_of(_REGISTRY[n]):
-            min_round = max(min_round, env_epochs.get(table, 0))
-        rows = [(r, e) for r, e in evidence.get(n, []) if r >= min_round]
-        has_oracle = _REGISTRY[n].oracle is not None
-        valid = [
-            r
-            for r, e in rows
-            if (
-                e.get("hash_match") is True
-                if has_oracle
-                else e.get("err") == "no_oracle" and e.get("spark_rows") is not None
-            )
-        ]
-        demanded = _SWEEP_PRIORITY.get(n)
-        if demanded is not None and not any(r >= demanded for r in valid):
-            # Priority-active: demanded evidence hasn't landed yet —
-            # outrank every other tier, in dict insertion order. Once
-            # the driver records the demanded round, the entry
-            # deactivates by itself and the query falls through to the
-            # normal tiers below (self-pruning).
-            return (0, _PRIORITY_INDEX[n])
+        rows = _current_rows(n, evidence, bars)
+        valid = [r for r, ok in rows if ok]
         if valid:
             # Evidenced: re-verify stalest first so cumulative coverage
             # stays fresh across rounds.
-            return (3, max(valid))
+            return (2, max(valid))
         # Ran but never validly evidenced (ERR row, or rows-only row for
         # a query that has since gained an oracle) before never-ran: a
         # recorded failure is the more urgent signal.
-        return (1, 0) if rows else (2, 0)
+        return (0, 0) if rows else (1, 0)
 
     # sorted() is stable: ties keep registration order.
     return sorted(_REGISTRY, key=key)

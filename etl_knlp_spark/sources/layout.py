@@ -556,26 +556,6 @@ def hilbert_value(col_a, col_b, bits: int = 16):
     return F.aggregate(s_values, init, step)["d"]
 
 
-def write_hilbert(
-    df: DataFrame, path: str, col_a: str, col_b: str, n_files: int = 32
-) -> None:
-    """Hilbert-clustered parquet — `write_zordered` with the Hilbert
-    index as the cluster key. Same one-time write cost, tighter
-    per-file min/max rectangles on both dimensions (measured against
-    z-order in test_layout_graph)."""
-    from pyspark.sql import functions as F
-
-    h = hilbert_value(F.col(col_a), F.col(col_b)).alias("__h")
-    (
-        df.withColumn("__h", h)
-        .repartitionByRange(n_files, "__h")
-        .sortWithinPartitions("__h")
-        .drop("__h")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
 @query(
     "layout_hilbert",
     oracle="""

@@ -1,36 +1,17 @@
 """Structured Streaming wiring (SURVEY.md §2.10).
 
 `windows.py` holds the window semantics (batch-checkable); this module
-binds the same aggregations to real streams: source builders, watermark
-policy, stateful dedup, and a foreachBatch JSON sink mirroring the
-reference's chunked S3 staging (dag-knlp.py:139-145). Tested with the
-rate and file sources — no external broker in this environment.
+binds the same aggregations to real streams: watermark policy,
+stateful dedup, a stream-static join, and an idempotent foreachBatch
+JSON sink standing in for the reference's chunked S3 staging
+(dag-knlp.py:139-145). Tested with the file source — no external
+broker in this environment.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def rate_events_stream(spark: SparkSession, rows_per_second: int = 100) -> DataFrame:
-    """Synthetic events stream from the built-in rate source, shaped
-    like the `events` table (event-time `ts`, user_id, type, value)."""
-    return (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", rows_per_second)
-        .load()
-        .select(
-            F.col("value").alias("event_id"),
-            F.col("timestamp").alias("ts"),
-            (F.col("value") % 50).alias("user_id"),
-            F.element_at(
-                F.array(F.lit("click"), F.lit("view"), F.lit("purchase")),
-                (F.col("value") % 3 + 1).cast("int"),
-            ).alias("event_type"),
-            (F.col("value") % 100 / 10.0).alias("value"),
-        )
-    )
 
 
 def windowed_counts(events: DataFrame, window: str = "10 minutes", watermark: str = "1 hour") -> DataFrame:
@@ -64,19 +45,6 @@ def write_stream_foreach_batch(df: DataFrame, path: str, checkpoint: str):
     return (
         df.writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-
-
-def write_stream_json(df: DataFrame, path: str, checkpoint: str, max_records_per_file: int = 10_000):
-    """JSON-lines streaming sink with part-file chunking — the streaming
-    analog of the reference's 10k-row chunked S3 staging
-    (dag-knlp.py:139-145 → `maxRecordsPerFile`)."""
-    return (
-        df.writeStream.format("json")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .option("maxRecordsPerFile", max_records_per_file)
         .outputMode("append")
     )
 

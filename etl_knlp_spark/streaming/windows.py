@@ -5,7 +5,7 @@ the extended engine adds the streaming operator family. Spark's window
 functions evaluate identically in batch and streaming, so these run as
 batch queries for the DuckDB oracle while `streaming.stream` wires the
 same aggregations behind `readStream` with watermarks (tested via the
-rate/memory sources).
+file source).
 
 100 TB notes: event-time windows aggregate partially map-side like any
 groupBy; the shuffle key is (window, type) whose cardinality is bounded

@@ -20,16 +20,13 @@ def _tool():
     return mod
 
 
-def _scenario(n_queries, pins, unevidenced, tier_rounds, fresh_round):
-    """Build (order, fresh, active_pins): `pins` invalidated queries
-    first (fresh=None), then `unevidenced`, then the stale tiers, then
-    everything else at `fresh_round` — the same shape _sweep_order
-    produces (pins and unevidenced front the list)."""
-    order, fresh, active = [], {}, []
+def _scenario(n_queries, unevidenced, tier_rounds, fresh_round):
+    """Build (order, fresh): `unevidenced` queries first (fresh=None),
+    then the stale tiers, then everything else at `fresh_round` — the
+    same shape _sweep_order produces (unevidenced queries front the
+    list)."""
+    order, fresh = [], {}
     i = 0
-    for _ in range(pins):
-        name = f"pin_{i}"
-        order.append(name); fresh[name] = None; active.append(name); i += 1
     for _ in range(unevidenced):
         name = f"none_{i}"
         order.append(name); fresh[name] = None; i += 1
@@ -40,27 +37,27 @@ def _scenario(n_queries, pins, unevidenced, tier_rounds, fresh_round):
     while i < n_queries:
         name = f"q{i}_fresh"
         order.append(name); fresh[name] = fresh_round; i += 1
-    return order, fresh, active
+    return order, fresh
 
 
 def test_r13_scenario_reports_the_one_query_overrun():
-    """The exact r13 arithmetic: 7 audit-invalidated codec pins + the
-    44-query owed tier (the r6 query + 43 r7 queries, all of which
-    breach the 6-round post-sweep bound if unswept at r13) = 51
-    mandatory vs 50 — the tool must report overrun 1 and NAME the
-    query that waits (the last owed query in sweep order: r13's
-    stream_session_window analogue)."""
+    """The exact r13 arithmetic: 7 audit-invalidated codec queries
+    (no valid evidence left) + the 44-query owed tier (the r6 query +
+    43 r7 queries, all of which breach the 6-round post-sweep bound if
+    unswept at r13) = 51 mandatory vs 50 — the tool must report
+    overrun 1 and NAME the query that waits (the last owed query in
+    sweep order: r13's stream_session_window analogue)."""
     tool = _tool()
     # 300 queries, cycle 6, next round 13: owed cutoff = 13 - 6 - 1 = 6
     # → tiers at r5/r6 are owed; a 44-query owed tier needs evidence
     # ≤ r6. Model it as 1 query at r5 + 43 at r6, rest fresh at r12.
-    order, fresh, active = _scenario(
-        300, pins=7, unevidenced=0,
+    order, fresh = _scenario(
+        300, unevidenced=7,
         tier_rounds=[(5, 1), (6, 43), (7, 40)], fresh_round=12,
     )
-    pw = tool.project_window(order, fresh, active)
+    pw = tool.project_window(order, fresh)
     assert pw["next_round"] == 13 and pw["cycle"] == 6 and pw["cutoff"] == 6
-    assert len(pw["pins"]) == 7
+    assert len(pw["unevidenced"]) == 7
     assert len(pw["overdue"]) == 44          # r5 + r6 tiers, not the r7s
     assert len(pw["demand"]) == 51
     assert pw["overrun"] == 1
@@ -70,62 +67,46 @@ def test_r13_scenario_reports_the_one_query_overrun():
 
 
 def test_no_overrun_when_demand_fits():
-    """Steady state: a 42-query owed tier + a handful of pins fits in
-    50 with room to spare — no waiters, overrun 0."""
+    """Steady state: a 42-query owed tier + a handful of unevidenced
+    queries fits in 50 with room to spare — no waiters, overrun 0."""
     tool = _tool()
-    order, fresh, active = _scenario(
-        300, pins=1, unevidenced=4,
+    order, fresh = _scenario(
+        300, unevidenced=5,
         tier_rounds=[(6, 1), (7, 41), (8, 37)], fresh_round=13,
     )
-    pw = tool.project_window(order, fresh, active)
+    pw = tool.project_window(order, fresh)
     assert pw["next_round"] == 14 and pw["cutoff"] == 7
     assert len(pw["overdue"]) == 42
     assert len(pw["demand"]) == 47
     assert pw["overrun"] == 0 and pw["waiters"] == []
 
 
-def test_pins_inside_demand_are_not_double_counted():
-    """A pinned query that is ALSO overdue counts once in demand."""
-    tool = _tool()
-    order, fresh, active = _scenario(
-        100, pins=0, unevidenced=0, tier_rounds=[(6, 60)], fresh_round=12,
-    )
-    # pin three queries that are already in the owed tier
-    active = order[:3]
-    pw = tool.project_window(order, fresh, active, budget=50)
-    # cycle = 2, next = 13, cutoff = 10 → all 60 r6 queries owed
-    assert pw["cycle"] == 2 and pw["cutoff"] == 10
-    assert len(pw["demand"]) == 60
-    assert pw["overrun"] == 10
-    assert len(pw["waiters"]) == 10
-
-
 def test_waiters_cohere_with_overrun_under_non_prefix_demand():
     """r14 ADVICE: waiters must be derived from demand, not from raw
     sweep-order position, so the two readings agree even when
     mandatory demand is NOT a strict prefix of the sweep order. Model
-    a tier-scheme change: a single pinned query that sits at sweep
+    a tier-scheme change: a single unevidenced query that sits at sweep
     position 80 (past the budget) while total demand is far under it.
-    The old `pos >= budget` rule would have named that pin a waiter
+    The old `pos >= budget` rule would have named that query a waiter
     alongside overrun == 0; the derived form keeps the invariant
     len(waiters) == overrun in every scheme."""
     tool = _tool()
-    order, fresh, active = _scenario(
-        100, pins=0, unevidenced=0, tier_rounds=[(6, 10)], fresh_round=12,
+    order, fresh = _scenario(
+        100, unevidenced=0, tier_rounds=[(6, 10)], fresh_round=12,
     )
-    # pin a FRESH query deep in the order — demand = 10 overdue + 1 pin
-    active = [order[80]]
-    pw = tool.project_window(order, fresh, active, budget=50)
+    # unevidence a FRESH query deep in the order — demand = 10 overdue + 1
+    fresh[order[80]] = None
+    pw = tool.project_window(order, fresh, budget=50)
     assert len(pw["demand"]) == 11
     assert pw["overrun"] == 0
     assert pw["waiters"] == []          # old rule: would name order[80]
     assert len(pw["waiters"]) == pw["overrun"]
     # and when demand genuinely overruns, the named waiters are the
     # LAST demand entries in sweep order — exactly the overrun count
-    order2, fresh2, active2 = _scenario(
-        100, pins=0, unevidenced=0, tier_rounds=[(6, 60)], fresh_round=12,
+    order2, fresh2 = _scenario(
+        100, unevidenced=0, tier_rounds=[(6, 60)], fresh_round=12,
     )
-    pw2 = tool.project_window(order2, fresh2, active2, budget=50)
+    pw2 = tool.project_window(order2, fresh2, budget=50)
     assert pw2["overrun"] == 10
     assert pw2["waiters"] == pw2["demand"][50:]
     assert len(pw2["waiters"]) == pw2["overrun"]
@@ -141,15 +122,10 @@ def test_live_registry_precheck_runs_clean():
     tool = _tool()
     registry._load_all()
     evidence = registry._evidence_rounds()
-    env = registry._environment_epochs()
+    bars = registry._staleness_bars()
     order = registry._sweep_order()
-    fresh = {n: tool.freshest_valid(n, evidence, env) for n in order}
-    active = [
-        n
-        for n in registry._SWEEP_PRIORITY
-        if fresh.get(n) is None or fresh[n] < registry._SWEEP_PRIORITY[n]
-    ]
-    pw = tool.project_window(order, fresh, active)
+    fresh = {n: tool.freshest_valid(n, evidence, bars) for n in order}
+    pw = tool.project_window(order, fresh)
     assert pw["overrun"] == 0, (
         f"the next driver window cannot cover the mandatory demand: "
         f"{pw['waiters']} would age past the rotation bound — re-plan "

@@ -1,18 +1,21 @@
 """Driver-evidence ledger: the judge's evidence replay, mechanized.
 
 For every registered query, computes the freshest VALID driver
-evidence round exactly as `registry._sweep_order` does — a
-CORRECTNESS_r*.json row counts only if it is a hash_match=true row
-(oracled) or a clean rows-only row (oracle-less), recorded at or
-after both the hand-maintained `_STALE_SINCE` bar and the computed
-environment epoch of every table the query touches. Prints:
+evidence round with the registry's own rule (`registry._current_rows`,
+the rule `registry._sweep_order` ranks by): a CORRECTNESS_r*.json row
+counts only if it is a hash_match=true row (oracled) or a clean
+rows-only row (oracle-less), recorded at or after the query's
+staleness bar. The bar is derived, not kept by hand: the later of the
+`stale_since` that tools/snapshot_oracles.py writes into
+oracle_snapshot.json and the environment epoch of every table the
+query reads. Prints:
 
   - the freshest-evidence histogram (the "evidence latency" the r9
     verdict graded — 62 queries sat at round 3/4 going into r10),
   - queries with NO valid evidence (these must sit inside the next
     50-query sweep window or they starve),
-  - the active `_SWEEP_PRIORITY` tier in order,
-  - the projected next sweep window (first 50 of `_sweep_order`).
+  - the projected next sweep window (first 50 of `_sweep_order`),
+  - the window-math pre-check and the steady-state staleness bound.
 
 Usage:  python tools/evidence_report.py [--window-only]
 """
@@ -28,30 +31,19 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from etl_knlp_spark import registry  # noqa: E402
 
 
-def freshest_valid(name: str, evidence, env_epochs) -> int | None:
-    rq = registry._REGISTRY[name]
-    min_round = registry._STALE_SINCE.get(name, 0)
-    for table in registry._tables_of(rq):
-        min_round = max(min_round, env_epochs.get(table, 0))
-    valid = [
-        r
-        for r, e in evidence.get(name, [])
-        if r >= min_round
-        and (
-            e.get("hash_match") is True
-            if rq.oracle is not None
-            else e.get("err") == "no_oracle" and e.get("spark_rows") is not None
-        )
-    ]
-    return max(valid) if valid else None
+def freshest_valid(name: str, evidence, bars) -> int | None:
+    return max(
+        (r for r, ok in registry._current_rows(name, evidence, bars) if ok),
+        default=None,
+    )
 
 
-def project_window(order, fresh, active_pins, budget=50):
+def project_window(order, fresh, budget=50):
     """Window-math pre-check (r13 verdict #5): compute this round's
-    MANDATORY demand — active priority pins, queries with no valid
-    evidence (both front the window by construction), and the stalest
-    evidence tier (every query as old as the oldest evidenced one,
-    which the rotation owes a re-sweep this round) — against the
+    MANDATORY demand — queries with no valid evidence (they front the
+    window by construction) and the stalest evidence tier (every query
+    as old as the oldest evidenced one, which the rotation owes a
+    re-sweep this round) — against the
     driver's 50-slot budget, BEFORE the round commits to conversions.
     r13 learned this by hand arithmetic after the fact: 7 audit-
     invalidated codec pins + the 44-query r6/r7 tier = 51 > 50, and
@@ -59,8 +51,8 @@ def project_window(order, fresh, active_pins, budget=50):
     6-round rotation bound. Returns the named list of demand queries
     that would wait, so the tradeoff is explicit up front.
 
-    `order` must be the registry's `_sweep_order()` (pins and
-    unevidenced queries already ranked ahead); `fresh` maps every
+    `order` must be the registry's `_sweep_order()` (unevidenced
+    queries already ranked ahead); `fresh` maps every
     query to its freshest valid evidence round or None.
 
     The owed tier is computed against the POST-SWEEP ledger bound:
@@ -76,10 +68,7 @@ def project_window(order, fresh, active_pins, budget=50):
     cutoff = next_round - cycle - 1
     unevidenced = [n for n in order if fresh[n] is None]
     overdue = [n for n in order if fresh[n] is not None and fresh[n] <= cutoff]
-    demand = sorted(
-        set(active_pins) | set(unevidenced) | set(overdue),
-        key=lambda n: pos[n],
-    )
+    demand = sorted(set(unevidenced) | set(overdue), key=lambda n: pos[n])
     # r14 ADVICE: derive waiters FROM demand so the two readings can
     # never disagree — `demand[budget:]` is the queries that miss the
     # window by the same arithmetic that computes `overrun`. (The old
@@ -93,7 +82,6 @@ def project_window(order, fresh, active_pins, budget=50):
         "cycle": cycle,
         "next_round": next_round,
         "cutoff": cutoff,
-        "pins": sorted(active_pins, key=lambda n: pos[n]),
         "unevidenced": unevidenced,
         "overdue": overdue,
         "demand": demand,
@@ -105,9 +93,9 @@ def project_window(order, fresh, active_pins, budget=50):
 def main() -> int:
     registry._load_all()
     evidence = registry._evidence_rounds()
-    env_epochs = registry._environment_epochs()
+    bars = registry._staleness_bars()
     order = registry._sweep_order()
-    fresh = {n: freshest_valid(n, evidence, env_epochs) for n in order}
+    fresh = {n: freshest_valid(n, evidence, bars) for n in order}
 
     if "--window-only" not in sys.argv:
         hist = Counter("none" if r is None else f"r{r}" for r in fresh.values())
@@ -121,16 +109,6 @@ def main() -> int:
                 pos = order.index(n)
                 tag = "inside" if pos < 50 else "OUTSIDE — WILL STARVE"
                 print(f"  {n} (sweep position {pos}: {tag})")
-        active = [
-            n
-            for n in registry._SWEEP_PRIORITY
-            if fresh.get(n) is None or fresh[n] < registry._SWEEP_PRIORITY[n]
-        ]
-        if active:
-            print(f"\n{len(active)} active _SWEEP_PRIORITY entries (insertion order):")
-            for n in active:
-                print(f"  {n} (demands r{registry._SWEEP_PRIORITY[n]}, has "
-                      f"{'none' if fresh[n] is None else 'r%d' % fresh[n]})")
 
     print("\nprojected next sweep window (first 50 of _sweep_order):")
     for i, n in enumerate(order[:50]):
@@ -140,15 +118,9 @@ def main() -> int:
     # Window-math pre-check (r13 verdict #5): mandatory demand vs the
     # 50-slot budget, with the queries that would wait named BEFORE
     # the round commits to evidence-invalidating conversions.
-    active_pins = [
-        n
-        for n in registry._SWEEP_PRIORITY
-        if fresh.get(n) is None or fresh[n] < registry._SWEEP_PRIORITY[n]
-    ]
-    pw = project_window(order, fresh, active_pins)
+    pw = project_window(order, fresh)
     print(
         f"\nwindow-math pre-check (next round r{pw['next_round']}): "
-        f"{len(pw['pins'])} active pins + "
         f"{len(pw['unevidenced'])} unevidenced + {len(pw['overdue'])} "
         f"overdue (evidence <= r{pw['cutoff']}) = {len(pw['demand'])} "
         f"mandatory vs budget {pw['budget']} -> overrun {pw['overrun']}"

@@ -4,9 +4,10 @@
 Run after the driver regenerates testdata (the sweep-order audit or a
 CORRECTNESS anomaly says so): for each table whose live pyarrow schema
 fingerprint differs from the recorded one, record the new fingerprint
-with epoch = (max recorded CORRECTNESS round + 1), so all pre-drift
-driver rows stop counting as evidence and the affected queries head the
-next sweep. Tables without drift keep their recorded epoch.
+with epoch = `registry._next_round()` (max recorded CORRECTNESS
+round + 1), so all pre-drift driver rows stop counting as evidence and
+the affected queries head the next sweep. Tables without drift keep
+their recorded epoch.
 
 Usage: python tools/update_epochs.py [--sf-dir /root/testdata/sf0.01]
 """
@@ -36,8 +37,7 @@ def main() -> None:
     except (OSError, ValueError):
         recorded = {}
 
-    rounds = [r for rows in registry._evidence_rounds().values() for r, _ in rows]
-    next_round = max(rounds, default=0) + 1
+    next_round = registry._next_round()
 
     changed = []
     for table in TABLES:
