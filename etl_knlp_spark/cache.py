@@ -9,6 +9,7 @@ the cache root is a per-user 0700 directory validated with lstat
 (ADVICE r6 #1 + r7 #4: a predictable /tmp name can be squatted by a
 pre-planted directory, symlink, or file — all three fail loudly here
 instead of serving or redirecting a poisoned index).
+:func:`file_identity` is that key, shared with catalog's schema cache.
 """
 
 from __future__ import annotations
@@ -46,14 +47,20 @@ def secure_cache_root() -> str:
     return root
 
 
+def file_identity(path: str) -> tuple[str, int, int]:
+    """(path, mtime_ns, size): the identity every cache keyed on a table
+    file uses, so a file rewritten in place gets a new key. For a
+    directory table the mtime is the directory's, which parquet writers
+    bump on commit."""
+    st = os.stat(path)
+    return path, st.st_mtime_ns, st.st_size
+
+
 def corpus_cache_path(sf_dir: str, table: str, prefix: str) -> str:
     """Deterministic per-corpus index location keyed by the source
     table's identity (path + mtime + size), so repeated queries against
     an unchanged corpus reuse the artifact and a regenerated corpus
-    gets a fresh build. (The graded testdata is a single parquet file;
-    for a directory table the mtime key is the directory's, which
-    parquet writers bump on commit.)"""
-    src = os.path.join(sf_dir, f"{table}.parquet")
-    st = os.stat(src)
-    key = hashlib.md5(f"{src}:{st.st_mtime_ns}:{st.st_size}".encode()).hexdigest()[:12]
+    gets a fresh build (:func:`file_identity`)."""
+    ident = file_identity(os.path.join(sf_dir, f"{table}.parquet"))
+    key = hashlib.md5(":".join(map(str, ident)).encode()).hexdigest()[:12]
     return os.path.join(secure_cache_root(), f"{prefix}_{key}")

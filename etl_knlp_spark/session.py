@@ -1,4 +1,10 @@
-"""SparkSession builder with defaults chosen for large-scale execution.
+"""SparkSession settings, kept in one table (:func:`engine_conf`).
+
+Two paths apply the table. :func:`get_spark` builds the engine's own
+session with every entry. :func:`tune_session` runs at the first table
+load on any session, including a driver's vanilla one, and applies the
+entries Spark lets a running session change (``spark.conf.isModifiable``);
+context-creation settings such as driver memory are out of its reach.
 
 Settings rationale (100 TB posture, per SURVEY.md §2.12 / §4):
 - AQE on: runtime re-planning (SMJ→BHJ conversion, skew-join splitting,
@@ -7,9 +13,10 @@ Settings rationale (100 TB posture, per SURVEY.md §2.12 / §4):
   splits oversized shuffle partitions instead of stalling one task.
 - Arrow on: every Pandas-UDF boundary moves columnar batches, not
   pickled rows.
-- Shuffle partitions default to the local core count; on a real cluster
-  this is overridden (or left to AQE coalescing from an intentionally
-  high initial number).
+- Shuffle partitions default to the local core count: ``cpus`` in
+  ``get_spark``, the context's ``defaultParallelism`` in
+  ``tune_session``; on a real cluster this is overridden (or left to AQE
+  coalescing from an intentionally high initial number).
 - UTC session timezone: deterministic timestamp semantics against
   external oracles and parquet files written by other engines.
 """
@@ -21,6 +28,21 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
+def engine_conf(cpus: int) -> dict[str, str]:
+    """The engine's session settings for a session with ``cpus`` cores."""
+    return {
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.shuffle.partitions": str(cpus),
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+        "spark.ui.enabled": "false",
+        "spark.sql.autoBroadcastJoinThreshold": str(32 * 1024 * 1024),
+    }
 
 
 def get_spark(
@@ -35,19 +57,25 @@ def get_spark(
     engine defaults without duplicating them; queries and the bench never
     pass it."""
     cpus = cpus or DEFAULT_CPUS
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(f"local[{cpus}]")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
-    )
-    for k, v in (extra_conf or {}).items():
+    builder = SparkSession.builder.appName(app_name).master(f"local[{cpus}]")
+    for k, v in {**engine_conf(cpus), **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def tune_session(spark: SparkSession) -> None:
+    """Apply the runtime-settable part of :func:`engine_conf`, once per
+    session. queries() callables receive the DRIVER's session, which may
+    ship Spark defaults (AQE off in older configs, 200 shuffle
+    partitions, machine-local timezone); these confs make plans and
+    timestamp semantics match the engine's design regardless of who
+    built the session."""
+    if getattr(spark, "_etl_knlp_tuned", False):
+        return
+    for k, v in engine_conf(spark.sparkContext.defaultParallelism).items():
+        try:
+            if spark.conf.isModifiable(k):
+                spark.conf.set(k, v)
+        except Exception:
+            pass  # a locked-down session still works, just less tuned
+    spark._etl_knlp_tuned = True

@@ -52,48 +52,57 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession  # noqa: E402
 
+from etl_knlp_spark.session import tune_session  # noqa: E402
 from verify_oracles import run_sweep  # noqa: E402
 
 
-def _base_builder(name: str):
-    return (
+def _layout_session(name: str, master: str, layout: dict[str, str]) -> SparkSession:
+    """A session with ``layout`` on top of the probe's base settings. The
+    first table load tunes every session to the engine's defaults
+    (``session.tune_session``); tune this one now and put the layout's
+    runtime confs back, so the queries run under the layout and not
+    under the defaults."""
+    builder = (
         SparkSession.builder.appName(name)
+        .master(master)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
+    for k, v in layout.items():
+        builder = builder.config(k, v)
+    spark = builder.getOrCreate()
+    tune_session(spark)
+    for k, v in layout.items():
+        if spark.conf.isModifiable(k):
+            spark.conf.set(k, v)
+    return spark
 
 
 def perturbed_session() -> SparkSession:
     """Many small misaligned partitions, no AQE, no broadcasts."""
-    return (
-        _base_builder("determinism_probe")
-        .master("local[5]")
-        .config("spark.sql.adaptive.enabled", "false")
-        .config("spark.sql.shuffle.partitions", "7")
-        .config("spark.default.parallelism", "3")
-        .config("spark.sql.files.maxPartitionBytes", str(256 * 1024))
-        .config("spark.sql.files.openCostInBytes", "0")
-        .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-        .getOrCreate()
-    )
+    return _layout_session("determinism_probe", "local[5]", {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.shuffle.partitions": "7",
+        "spark.default.parallelism": "3",
+        "spark.sql.files.maxPartitionBytes": str(256 * 1024),
+        "spark.sql.files.openCostInBytes": "0",
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+    })
 
 
 def serial_session() -> SparkSession:
     """Fully-serial single-partition extreme: one thread, one shuffle
     partition, whole-file splits — reductions left-fold in scan order
     and Python kernels see maximal batches."""
-    return (
-        _base_builder("determinism_probe_serial")
-        .master("local[1]")
-        .config("spark.sql.adaptive.enabled", "false")
-        .config("spark.sql.shuffle.partitions", "1")
-        .config("spark.default.parallelism", "1")
-        .config("spark.sql.files.maxPartitionBytes", str(1 << 40))
-        .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-        .getOrCreate()
-    )
+    return _layout_session("determinism_probe_serial", "local[1]", {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.shuffle.partitions": "1",
+        "spark.default.parallelism": "1",
+        "spark.sql.files.maxPartitionBytes": str(1 << 40),
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+    })
 
 
 _LAYOUTS = {"hostile": perturbed_session, "serial": serial_session}

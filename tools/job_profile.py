@@ -2,8 +2,10 @@
 
 Runs the named headline queries (bench probe overrides applied, same
 noop-sink materialization as bench.py) under an event log, labels each
-query's jobs via setJobDescription, then attributes every job/stage to
-its query and prints one summary line per query:
+query's jobs via setJobDescription (``profile:<name>:build`` while the
+query function builds the DataFrame, ``profile:<name>:exec`` while it is
+materialized), then attributes every job/stage to its query and prints
+one summary line per query, with build and execution jobs counted apart:
 
     python tools/job_profile.py dedup_minhash q5_nation_volume ...
     python tools/job_profile.py            # whole headline set
@@ -56,13 +58,16 @@ def main() -> None:
     overrides = bench._probe_overrides()
 
     wall: dict[str, float] = {}
+    sc = spark.sparkContext
     for name in names:
         fn = overrides.get(name, queries[name])
-        spark.sparkContext.setJobDescription(f"profile:{name}")
         t0 = time.perf_counter()
-        bench.materialize(fn(spark, SF_DIR))
+        sc.setJobDescription(f"profile:{name}:build")
+        df = fn(spark, SF_DIR)
+        sc.setJobDescription(f"profile:{name}:exec")
+        bench.materialize(df)
         wall[name] = time.perf_counter() - t0
-        spark.sparkContext.setJobDescription(None)
+        sc.setJobDescription(None)
     app_id = spark.sparkContext.applicationId
     spark.stop()
 
@@ -98,7 +103,7 @@ def main() -> None:
                 with open(path) as fh:
                     yield from fh
 
-    job_query: dict[int, str] = {}
+    job_query: dict[int, tuple[str, str]] = {}  # job id -> (query, "build" | "exec")
     job_stages: dict[int, list[int]] = {}
     stage_info: dict[int, dict] = {}
     for line in _event_lines():
@@ -107,8 +112,8 @@ def main() -> None:
         if kind == "SparkListenerJobStart":
             desc = (ev.get("Properties") or {}).get("spark.job.description", "")
             if desc.startswith("profile:"):
-                q = desc.split(":", 1)[1]
-                job_query[ev["Job ID"]] = q
+                q, phase = desc[len("profile:"):].rsplit(":", 1)
+                job_query[ev["Job ID"]] = (q, phase)
                 job_stages[ev["Job ID"]] = [
                     s["Stage ID"] for s in ev.get("Stage Infos", [])
                 ]
@@ -116,10 +121,11 @@ def main() -> None:
             si = ev["Stage Info"]
             stage_info[si["Stage ID"]] = si
 
-    print(f"{'query':28s} {'wall_s':>7s} {'jobs':>4s} {'stages':>6s} "
-          f"{'tasks':>6s} {'shuf_w_MB':>9s} {'shuf_r_MB':>9s}")
+    print(f"{'query':28s} {'wall_s':>7s} {'build_jobs':>10s} {'exec_jobs':>9s} "
+          f"{'stages':>6s} {'tasks':>6s} {'shuf_w_MB':>9s} {'shuf_r_MB':>9s}")
     for name in names:
-        jobs = [j for j, q in job_query.items() if q == name]
+        jobs = [j for j, (q, _) in job_query.items() if q == name]
+        build_jobs = sum(job_query[j][1] == "build" for j in jobs)
         stages = sorted(
             {s for j in jobs for s in job_stages.get(j, []) if s in stage_info}
         )
@@ -141,8 +147,8 @@ def main() -> None:
             "internal.metrics.shuffle.read.localBytesRead"
         ) / 1e6
         print(
-            f"{name:28s} {wall[name]:7.3f} {len(jobs):4d} {len(stages):6d} "
-            f"{tasks:6d} {sw:9.2f} {sr:9.2f}"
+            f"{name:28s} {wall[name]:7.3f} {build_jobs:10d} {len(jobs) - build_jobs:9d} "
+            f"{len(stages):6d} {tasks:6d} {sw:9.2f} {sr:9.2f}"
         )
 
 
