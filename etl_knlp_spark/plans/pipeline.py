@@ -6,9 +6,9 @@ COPY loads (E2, dag-knlp.py:192-241), a dimension-build INSERT...SELECT
 (E3, dag-knlp.py:65-80), then two data-quality checks
 (dag-knlp.py:243-279). Here the same stages are plain function
 composition over DataFrames — Spark's lazy DAG already executes in
-dependency order, the fan-out stages are independent plans, and the
-Airflow barriers (DummyOperator, dag-knlp.py:300-302) are just
-action sequencing.
+dependency order, the three parses are independent write actions
+submitted together, and the Airflow barriers (DummyOperator,
+dag-knlp.py:300-302) are just action sequencing.
 
 Known reference bugs are NOT replicated (SURVEY.md §7): the hanja
 `hanja`-vs-`hanjya` key mismatch that NULLed a whole column, the
@@ -20,10 +20,12 @@ in tests as divergences.
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from ..operators.quality import check_count, check_max_length
 from ..sources.io import read_json_auto, write_json_lines
@@ -34,6 +36,11 @@ from .dimension import with_identity
 KOREAN_COLS = ["edit_id", "word_id", "korean"]
 KOREAN_JAPANESE_COLS = ["article_id", "language", "text"]
 KOREAN_HANJYA_COLS = ["korean", "hanjya", "examples"]
+
+
+def _ddl(cols: list[str]) -> StructType:
+    """The staging table's DDL: every column VARCHAR (dag-knlp.py:24-63)."""
+    return StructType([StructField(c, StringType()) for c in cols])
 
 
 @dataclass
@@ -52,8 +59,13 @@ def parse_stage(spark: SparkSession, raw_dir: str, stage_dir: str) -> None:
     Mirrors read_hanjya / read_title / read_langlink
     (dag-knlp.py:85-188) as distributed text scans + split/explode
     expressions; the 10k-row chunking (dag-knlp.py:139-145) is the
-    writer's maxRecordsPerFile. Three independent write actions = the
-    DAG's parallel preprocess fan-out.
+    writer's maxRecordsPerFile. The three write actions are submitted
+    together from a thread pool — the DAG's parallel preprocess
+    fan-out — so each job's one or two tasks share the cores with the
+    others'. Each thread inherits the caller's local properties (job
+    group, description) and session tags, so cancelling or attributing
+    the caller's group or tag still covers these jobs. Waits for all
+    three writes and re-raises the first error.
     """
     hanjya = read_delimited(
         spark, os.path.join(raw_dir, "hanja.txt"), KOREAN_HANJYA_COLS, sep=":"
@@ -64,27 +76,31 @@ def parse_stage(spark: SparkSession, raw_dir: str, stage_dir: str) -> None:
     langlinks = read_tuple_burst(
         spark, os.path.join(raw_dir, "langlink.txt"), KOREAN_JAPANESE_COLS
     )
-    write_json_lines(hanjya, os.path.join(stage_dir, "hanjya"), max_records_per_file=10_000)
-    write_json_lines(titles, os.path.join(stage_dir, "titles"), max_records_per_file=10_000)
-    write_json_lines(
-        langlinks, os.path.join(stage_dir, "langlinks"), max_records_per_file=10_000
-    )
+    write = inheritable_thread_target(spark)(write_json_lines)
+    staged = {"hanjya": hanjya, "titles": titles, "langlinks": langlinks}
+    with ThreadPoolExecutor(max_workers=len(staged)) as pool:
+        futures = [
+            pool.submit(write, df, os.path.join(stage_dir, name), max_records_per_file=10_000)
+            for name, df in staged.items()
+        ]
+    for future in futures:
+        future.result()
 
 
 def load_tables(spark: SparkSession, stage_dir: str) -> dict[str, DataFrame]:
-    """E2: bulk load staged JSON by name binding (COPY ... JSON 'auto',
-    dag-knlp.py:202-239), projecting to DDL column order, then adding
-    the identity surrogate (INT IDENTITY(1,1) → engine policy)."""
+    """E2: bulk load staged JSON the way COPY ... JSON 'auto' does
+    (dag-knlp.py:202-239): keys bind by name against the DDL, with no
+    schema inference and so no Spark job, in DDL column order; then the
+    identity surrogate (INT IDENTITY(1,1) → engine policy) is added."""
+
+    def load(name: str, cols: list[str]) -> DataFrame:
+        path = os.path.join(stage_dir, name)
+        return with_identity(read_json_auto(spark, path, cols, schema=_ddl(cols)))
+
     return {
-        "korean": with_identity(
-            read_json_auto(spark, os.path.join(stage_dir, "titles"), KOREAN_COLS)
-        ),
-        "korean_japanese": with_identity(
-            read_json_auto(spark, os.path.join(stage_dir, "langlinks"), KOREAN_JAPANESE_COLS)
-        ),
-        "korean_hanjya": with_identity(
-            read_json_auto(spark, os.path.join(stage_dir, "hanjya"), KOREAN_HANJYA_COLS)
-        ),
+        "korean": load("titles", KOREAN_COLS),
+        "korean_japanese": load("langlinks", KOREAN_JAPANESE_COLS),
+        "korean_hanjya": load("hanjya", KOREAN_HANJYA_COLS),
     }
 
 

@@ -7,8 +7,9 @@ Reference behaviors re-expressed:
   committer replaces boto3 PUTs on a real cluster).
 - 10k-row chunked part-files (dag-knlp.py:126, 139-145) →
   `maxRecordsPerFile` — Spark's normal multi-part output.
-- `COPY ... JSON 'auto'` schema-on-read name binding
-  (dag-knlp.py:202-205) → `spark.read.json` + select to DDL order.
+- `COPY ... JSON 'auto'` name binding against the table's DDL
+  (dag-knlp.py:202-205) → `spark.read.schema(ddl).json` + select to DDL
+  order.
 - `CREATE TABLE IF NOT EXISTS` + `INSERT INTO ... SELECT`
   (dag-knlp.py:24-63, 66-71) → saveAsTable / insertInto.
 """
@@ -17,6 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 
 def write_json_lines(df: DataFrame, path: str, max_records_per_file: int = 10_000, mode: str = "overwrite") -> None:
@@ -33,23 +35,34 @@ def read_json_auto(
     columns: list[str] | None = None,
     mode: str = "PERMISSIVE",
     corrupt_col: str | None = None,
+    schema: StructType | None = None,
 ) -> DataFrame:
-    """S6: bulk JSON load with name-based binding — `spark.read.json`
-    infers the schema and binds by key name exactly like
-    `COPY ... JSON 'auto'` (dag-knlp.py:202-205); a directory path
+    """S6: bulk JSON load with name-based binding; a directory path
     loads every part-file (the reference's prefix COPY,
     dag-knlp.py:231-239). Pass `columns` to project to DDL order
     (the explicit column-list COPY variant, dag-knlp.py:202).
 
+    Pass the table's DDL as `schema` to load the way
+    `COPY ... JSON 'auto'` does (dag-knlp.py:202-205): JSON keys bind
+    to the declared columns by name and nothing is inferred, so the
+    load starts no Spark job and a column absent from every record
+    (the JSON writer drops null fields) loads as NULL. Without
+    `schema`, `spark.read.json` infers one with a scan of every byte.
+
     Malformed-record policy (the part Redshift's COPY error table
     handles in the reference): PERMISSIVE (default) nulls bad rows —
     pass `corrupt_col` to quarantine the raw bad line into a column
-    instead of dropping it silently; DROPMALFORMED discards;
+    instead of dropping it silently (with a `schema`, the column is
+    appended to it as a nullable string); DROPMALFORMED discards;
     FAILFAST raises on the first bad record.
     """
     reader = spark.read.option("mode", mode)
     if corrupt_col is not None:
         reader = reader.option("columnNameOfCorruptRecord", corrupt_col)
+    if schema is not None:
+        if corrupt_col is not None and corrupt_col not in schema.fieldNames():
+            schema = StructType([*schema.fields, StructField(corrupt_col, StringType())])
+        reader = reader.schema(schema)
     df = reader.json(path)
     if columns is not None:
         keep = list(columns) + ([corrupt_col] if corrupt_col in df.columns else [])

@@ -4,14 +4,17 @@ The reference's three pandas parsers each cap at stop_line = 1,500,000
 lines (dag-knlp.py:97, 127, 168) and the author describes the
 single-process row-append parse as "waiting for hours"
 (dag-knlp.py:98-99). This tool generates a fixture at exactly that
-scale — 1.5M wiki-index lines, 1.5M hanja lines, 150k langlink lines
-of 10 tuples each (1.5M langlink records) — runs the full
+scale with `perfbench/gen.write_reference_raw` (seed `SEED`) — 1.5M
+wiki-index lines, 1.5M hanja lines, 150k langlink lines of 10 tuples
+each (1.5M langlink records) — runs the full
 `plans.pipeline.run_reference_pipeline` (parse → staged JSON-lines →
-bulk load → dimension build → both DQ checks), and prints per-stage
-wall time. The measured number goes in BASELINE.md: it is the one
-reference-derived figure this repo can beat on the reference's own
-terms (same input scale, same declared semantics, distributed scan +
-codegen split instead of a pandas append loop).
+bulk load → dimension build → both DQ checks), and prints the total
+and per-stage wall time (`stage_sec`: parse, load, checks, and the
+dimension build with its noop materialization). The measured number
+goes in BASELINE.md: it is the one reference-derived figure this repo
+can beat on the reference's own terms (same input scale, same declared
+semantics, distributed scan + codegen split instead of a pandas append
+loop).
 
 Usage:  python tools/bench_reference_e2e.py [--keep]
 """
@@ -28,75 +31,62 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 STOP_LINE = 1_500_000  # dag-knlp.py:97,127,168
-TUPLES_PER_LANGLINK_LINE = 10
-LANGS = ["en", "ja", "de", "fr", "zh"]
+SEED = 1
+# run_reference_pipeline's stage functions → the stage they are timed under
+STAGE_OF = {
+    "parse_stage": "parse",
+    "load_tables": "load",
+    "check_count": "checks",
+    "check_max_length": "checks",
+    "build_dimension": "dimension",
+}
 
 
-def generate_fixture(raw_dir: str) -> dict[str, int]:
-    """FIXTURES.md-shaped raw files at the reference's stop_line scale.
+def time_stages(pipeline) -> dict[str, float]:
+    """Wrap the stage functions in ``pipeline``'s globals, which
+    ``run_reference_pipeline`` looks up at call time, so each call adds
+    its wall time to its stage's entry in the returned dict."""
+    seconds = dict.fromkeys(STAGE_OF.values(), 0.0)
+    for name, stage in STAGE_OF.items():
+        fn = getattr(pipeline, name)
 
-    Titles reuse a bounded Korean vocabulary so the hanja join hits,
-    ~1 in 3 word_ids carries langlinks (several languages — preserving
-    the §2.3 fan-out quirk), and every 1000th wiki line is a ragged
-    title containing the delimiter (the overflow path stays exercised
-    at scale, dag-knlp.py:136-137).
-    """
-    t0 = time.perf_counter()
-    syllables = ["가", "나", "다", "라", "마", "바", "사", "아", "자", "차"]
+        def timed(*args, _fn=fn, _stage=stage, **kwargs):
+            t0 = time.perf_counter()
+            try:
+                return _fn(*args, **kwargs)
+            finally:
+                seconds[_stage] += time.perf_counter() - t0
 
-    def korean_word(i: int) -> str:
-        return "".join(syllables[int(d)] for d in str(i % 100_000))
-
-    with open(os.path.join(raw_dir, "wiki_index.txt"), "w", encoding="utf-8") as f:
-        for i in range(STOP_LINE):
-            title = korean_word(i)
-            if i % 1000 == 999:
-                title = f"{title}: 부제"  # ragged — delimiter inside the title
-            f.write(f"{600 + i}:{i}:{title}\n")
-
-    with open(os.path.join(raw_dir, "hanja.txt"), "w", encoding="utf-8") as f:
-        for i in range(STOP_LINE):
-            f.write(f"{korean_word(i)}:漢{i % 100_000}:예문{i}, 용례{i}\n")
-
-    n_langlink_lines = STOP_LINE // TUPLES_PER_LANGLINK_LINE
-    with open(os.path.join(raw_dir, "langlink.txt"), "w", encoding="utf-8") as f:
-        for line_no in range(n_langlink_lines):
-            parts = []
-            for j in range(TUPLES_PER_LANGLINK_LINE):
-                k = line_no * TUPLES_PER_LANGLINK_LINE + j
-                word_id = (k * 3) % STOP_LINE  # ~1/3 of word_ids hit
-                lang = LANGS[k % len(LANGS)]
-                parts.append(f"{word_id},{lang},title_{lang}_{word_id}")
-            f.write("),(".join(parts) + "\n")
-
-    return {
-        "gen_sec": round(time.perf_counter() - t0, 1),
-        "wiki_lines": STOP_LINE,
-        "hanja_lines": STOP_LINE,
-        "langlink_records": n_langlink_lines * TUPLES_PER_LANGLINK_LINE,
-    }
+        setattr(pipeline, name, timed)
+    return seconds
 
 
 def main() -> None:
-    from etl_knlp_spark.plans.pipeline import run_reference_pipeline
+    from etl_knlp_spark.plans import pipeline
     from etl_knlp_spark.session import get_spark
+    from perfbench import gen
 
     keep = "--keep" in sys.argv
     work = tempfile.mkdtemp(prefix="etl_knlp_e2e_")
     raw, stage = os.path.join(work, "raw"), os.path.join(work, "stage")
     os.makedirs(raw)
 
-    stats = generate_fixture(raw)
+    t0 = time.perf_counter()
+    stats = gen.write_reference_raw(raw, SEED, STOP_LINE)
+    stats["gen_sec"] = round(time.perf_counter() - t0, 1)
 
     spark = get_spark(app_name="etl_knlp_e2e_bench")
     spark.sparkContext.setLogLevel("ERROR")
 
+    stage_sec = time_stages(pipeline)
     t0 = time.perf_counter()
-    result = run_reference_pipeline(spark, raw, stage)
+    result = pipeline.run_reference_pipeline(spark, raw, stage)
     # run_reference_pipeline already executed the three staged writes
     # and both DQ actions; materialize the dimension through the noop
     # sink so the measured time covers the whole DAG end to end.
+    t_dim = time.perf_counter()
     result.dimension.write.mode("overwrite").format("noop").save()
+    stage_sec["dimension"] += time.perf_counter() - t_dim
     pipeline_sec = round(time.perf_counter() - t0, 1)
 
     dim_rows = result.dimension.count()
@@ -143,6 +133,7 @@ def main() -> None:
                 "metric": "reference_pipeline_e2e",
                 "value": pipeline_sec,
                 "unit": "sec",
+                "stage_sec": {k: round(v, 2) for k, v in stage_sec.items()},
                 "fixture": stats,
                 "korean_rows": result.row_count,
                 "dimension_rows": dim_rows,
