@@ -25,7 +25,6 @@ from dataclasses import dataclass
 
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StringType, StructField, StructType
 
 from ..operators.quality import check_count, check_max_length
 from ..sources.io import read_json_auto, write_json_lines
@@ -36,11 +35,6 @@ from .dimension import with_identity
 KOREAN_COLS = ["edit_id", "word_id", "korean"]
 KOREAN_JAPANESE_COLS = ["article_id", "language", "text"]
 KOREAN_HANJYA_COLS = ["korean", "hanjya", "examples"]
-
-
-def _ddl(cols: list[str]) -> StructType:
-    """The staging table's DDL: every column VARCHAR (dag-knlp.py:24-63)."""
-    return StructType([StructField(c, StringType()) for c in cols])
 
 
 @dataclass
@@ -63,9 +57,9 @@ def parse_stage(spark: SparkSession, raw_dir: str, stage_dir: str) -> None:
     together from a thread pool — the DAG's parallel preprocess
     fan-out — so each job's one or two tasks share the cores with the
     others'. Each thread inherits the caller's local properties (job
-    group, description) and session tags, so cancelling or attributing
-    the caller's group or tag still covers these jobs. Waits for all
-    three writes and re-raises the first error.
+    group, description), so cancelling or attributing the caller's
+    group still covers these jobs. Waits for all three writes and
+    re-raises the first error.
     """
     hanjya = read_delimited(
         spark, os.path.join(raw_dir, "hanja.txt"), KOREAN_HANJYA_COLS, sep=":"
@@ -76,7 +70,7 @@ def parse_stage(spark: SparkSession, raw_dir: str, stage_dir: str) -> None:
     langlinks = read_tuple_burst(
         spark, os.path.join(raw_dir, "langlink.txt"), KOREAN_JAPANESE_COLS
     )
-    write = inheritable_thread_target(spark)(write_json_lines)
+    write = inheritable_thread_target(write_json_lines)
     staged = {"hanjya": hanjya, "titles": titles, "langlinks": langlinks}
     with ThreadPoolExecutor(max_workers=len(staged)) as pool:
         futures = [
@@ -95,7 +89,7 @@ def load_tables(spark: SparkSession, stage_dir: str) -> dict[str, DataFrame]:
 
     def load(name: str, cols: list[str]) -> DataFrame:
         path = os.path.join(stage_dir, name)
-        return with_identity(read_json_auto(spark, path, cols, schema=_ddl(cols)))
+        return with_identity(read_json_auto(spark, path, cols))
 
     return {
         "korean": load("titles", KOREAN_COLS),

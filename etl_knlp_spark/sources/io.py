@@ -8,8 +8,8 @@ Reference behaviors re-expressed:
 - 10k-row chunked part-files (dag-knlp.py:126, 139-145) →
   `maxRecordsPerFile` — Spark's normal multi-part output.
 - `COPY ... JSON 'auto'` name binding against the table's DDL
-  (dag-knlp.py:202-205) → `spark.read.schema(ddl).json` + select to DDL
-  order.
+  (dag-knlp.py:202-205) → `spark.read.schema(ddl).json`, the DDL an
+  all-string struct in column order.
 - `CREATE TABLE IF NOT EXISTS` + `INSERT INTO ... SELECT`
   (dag-knlp.py:24-63, 66-71) → saveAsTable / insertInto.
 """
@@ -17,7 +17,6 @@ Reference behaviors re-expressed:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 
@@ -32,42 +31,30 @@ def write_json_lines(df: DataFrame, path: str, max_records_per_file: int = 10_00
 def read_json_auto(
     spark: SparkSession,
     path: str,
-    columns: list[str] | None = None,
+    columns: list[str],
     mode: str = "PERMISSIVE",
     corrupt_col: str | None = None,
-    schema: StructType | None = None,
 ) -> DataFrame:
-    """S6: bulk JSON load with name-based binding; a directory path
-    loads every part-file (the reference's prefix COPY,
-    dag-knlp.py:231-239). Pass `columns` to project to DDL order
-    (the explicit column-list COPY variant, dag-knlp.py:202).
-
-    Pass the table's DDL as `schema` to load the way
-    `COPY ... JSON 'auto'` does (dag-knlp.py:202-205): JSON keys bind
-    to the declared columns by name and nothing is inferred, so the
-    load starts no Spark job and a column absent from every record
-    (the JSON writer drops null fields) loads as NULL. Without
-    `schema`, `spark.read.json` infers one with a scan of every byte.
+    """S6: bulk JSON load the way `COPY ... JSON 'auto'` does
+    (dag-knlp.py:202-205): JSON keys bind by name to the table's DDL —
+    `columns`, in DDL order, every one VARCHAR (dag-knlp.py:24-63) — and
+    nothing is inferred, so the load starts no Spark job and a column
+    absent from every record (the JSON writer drops null fields) loads
+    as NULL. A directory path loads every part-file (the reference's
+    prefix COPY, dag-knlp.py:231-239).
 
     Malformed-record policy (the part Redshift's COPY error table
     handles in the reference): PERMISSIVE (default) nulls bad rows —
     pass `corrupt_col` to quarantine the raw bad line into a column
-    instead of dropping it silently (with a `schema`, the column is
-    appended to it as a nullable string); DROPMALFORMED discards;
-    FAILFAST raises on the first bad record.
+    appended after the DDL's instead of dropping it silently;
+    DROPMALFORMED discards; FAILFAST raises on the first bad record.
     """
+    fields = [StructField(c, StringType()) for c in columns]
     reader = spark.read.option("mode", mode)
     if corrupt_col is not None:
         reader = reader.option("columnNameOfCorruptRecord", corrupt_col)
-    if schema is not None:
-        if corrupt_col is not None and corrupt_col not in schema.fieldNames():
-            schema = StructType([*schema.fields, StructField(corrupt_col, StringType())])
-        reader = reader.schema(schema)
-    df = reader.json(path)
-    if columns is not None:
-        keep = list(columns) + ([corrupt_col] if corrupt_col in df.columns else [])
-        df = df.select(*[F.col(c) for c in keep])
-    return df
+        fields.append(StructField(corrupt_col, StringType()))
+    return reader.schema(StructType(fields)).json(path)
 
 
 def create_table_if_not_exists(spark: SparkSession, name: str, ddl_schema: str, location: str | None = None) -> None:

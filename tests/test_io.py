@@ -6,7 +6,6 @@ from __future__ import annotations
 import glob
 
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from etl_knlp_spark.catalog import load_table
 from etl_knlp_spark.sources.io import (
@@ -54,18 +53,15 @@ def test_corrupt_json_records_are_quarantined(spark, tmp_path):
     d.mkdir()
     (d / "good.json").write_text('{"a": 1, "b": "x"}\n{"a": 2, "b": "y"}\n')
     (d / "bad.json").write_text('{"a": 3, "b": "z"}\n{broken not json\n')
-    # inferred, and bound to a DDL that lacks the corrupt column (the
-    # reader appends it, or the bad line's text would be lost)
-    for schema in (None, T.StructType([T.StructField(c, T.StringType()) for c in "ab"])):
-        df = read_json_auto(spark, str(d), columns=["a", "b"], corrupt_col="_bad", schema=schema)
-        rows = df.collect()
-        assert len(rows) == 4
-        bad = [r for r in rows if r["_bad"] is not None]
-        assert len(bad) == 1 and "broken" in bad[0]["_bad"]
-        # DROPMALFORMED discards the bad line instead
-        dropped = read_json_auto(spark, str(d), columns=["a", "b"], mode="DROPMALFORMED", schema=schema)
-        assert dropped.count() == 3
-    assert schema.fieldNames() == ["a", "b"]  # the caller's DDL is not mutated
+    df = read_json_auto(spark, str(d), ["a", "b"], corrupt_col="_bad")
+    assert df.columns == ["a", "b", "_bad"]
+    rows = df.collect()
+    assert len(rows) == 4
+    bad = [r for r in rows if r["_bad"] is not None]
+    assert len(bad) == 1 and "broken" in bad[0]["_bad"]
+    # DROPMALFORMED discards the bad line instead
+    dropped = read_json_auto(spark, str(d), ["a", "b"], mode="DROPMALFORMED")
+    assert dropped.count() == 3
 
 
 def test_events_nanos_timestamp_loads(spark, sf_dir):

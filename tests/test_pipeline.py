@@ -162,6 +162,21 @@ def test_parse_stage_jobs_stay_in_callers_group(spark, chunked_raw, tmp_path):
     assert ungrouped == set()
 
 
+def test_parse_stage_runs_with_unpinned_threads(spark, chunked_raw, tmp_path, monkeypatch):
+    """Without pinned threads (PYSPARK_PIN_THREAD=false, a plain py4j
+    JavaGateway), inheritable_thread_target hands the write function
+    back unwrapped; the three writes still run and stage every table."""
+    import py4j.clientserver
+
+    monkeypatch.setattr(py4j.clientserver, "ClientServer", type("NotTheGateway", (), {}))
+    stage = str(tmp_path / "stage")
+    pipeline.parse_stage(spark, chunked_raw, stage)
+    monkeypatch.undo()
+    for name in ("hanjya", "titles", "langlinks"):
+        files, lines = _staged(stage, name)
+        assert files >= 3 and len(lines) == 25_000
+
+
 def test_load_tables_runs_no_spark_job(spark, chunked_raw, tmp_path):
     stage = str(tmp_path / "stage")
     pipeline.parse_stage(spark, chunked_raw, stage)

@@ -9,8 +9,9 @@ wiki-index lines, 1.5M hanja lines, 150k langlink lines of 10 tuples
 each (1.5M langlink records) — runs the full
 `plans.pipeline.run_reference_pipeline` (parse → staged JSON-lines →
 bulk load → dimension build → both DQ checks), and prints the total
-and per-stage wall time (`stage_sec`: parse, load, checks, and the
-dimension build with its noop materialization). The measured number
+and per-stage wall time (`stage_sec`: perfbench's spans around the
+stage functions -- parse, load, both checks, the lazy dimension build --
+summed by span name, plus the dimension's noop materialization). The measured number
 goes in BASELINE.md: it is the one reference-derived figure this repo
 can beat on the reference's own terms (same input scale, same declared
 semantics, distributed scan + codegen split instead of a pandas append
@@ -28,43 +29,21 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "perfbench"))
 
 STOP_LINE = 1_500_000  # dag-knlp.py:97,127,168
 SEED = 1
-# run_reference_pipeline's stage functions → the stage they are timed under
-STAGE_OF = {
-    "parse_stage": "parse",
-    "load_tables": "load",
-    "check_count": "checks",
-    "check_max_length": "checks",
-    "build_dimension": "dimension",
-}
-
-
-def time_stages(pipeline) -> dict[str, float]:
-    """Wrap the stage functions in ``pipeline``'s globals, which
-    ``run_reference_pipeline`` looks up at call time, so each call adds
-    its wall time to its stage's entry in the returned dict."""
-    seconds = dict.fromkeys(STAGE_OF.values(), 0.0)
-    for name, stage in STAGE_OF.items():
-        fn = getattr(pipeline, name)
-
-        def timed(*args, _fn=fn, _stage=stage, **kwargs):
-            t0 = time.perf_counter()
-            try:
-                return _fn(*args, **kwargs)
-            finally:
-                seconds[_stage] += time.perf_counter() - t0
-
-        setattr(pipeline, name, timed)
-    return seconds
 
 
 def main() -> None:
+    import gen
+    import run as perfbench_run
+    import tracing
+
     from etl_knlp_spark.plans import pipeline
     from etl_knlp_spark.session import get_spark
-    from perfbench import gen
 
     keep = "--keep" in sys.argv
     work = tempfile.mkdtemp(prefix="etl_knlp_e2e_")
@@ -78,7 +57,11 @@ def main() -> None:
     spark = get_spark(app_name="etl_knlp_e2e_bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    stage_sec = time_stages(pipeline)
+    # perfbench's spans around run_reference_pipeline's stage functions,
+    # summed by span name below
+    tracer = tracing.Tracer(spark.sparkContext, "e2e")
+    tracer.active = True
+    perfbench_run._install_tracing(tracer)
     t0 = time.perf_counter()
     result = pipeline.run_reference_pipeline(spark, raw, stage)
     # run_reference_pipeline already executed the three staged writes
@@ -86,7 +69,9 @@ def main() -> None:
     # sink so the measured time covers the whole DAG end to end.
     t_dim = time.perf_counter()
     result.dimension.write.mode("overwrite").format("noop").save()
-    stage_sec["dimension"] += time.perf_counter() - t_dim
+    stage_sec = {"dimension_noop_write": time.perf_counter() - t_dim}
+    for span in tracer.spans:
+        stage_sec[span.name] = stage_sec.get(span.name, 0.0) + span.end - span.start
     pipeline_sec = round(time.perf_counter() - t0, 1)
 
     dim_rows = result.dimension.count()
