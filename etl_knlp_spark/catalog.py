@@ -43,15 +43,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-# Bounded-size dimension tables that are always safe to broadcast-join
-# (region/nation are fixed-cardinality; supplier/part/customer grow with
-# SF but stay orders of magnitude under fact tables — at true 100 TB
-# scale customer would graduate out of this set).
-SMALL_DIMS = frozenset({"region", "nation", "supplier"})
-
-
 # Session confs that change what parquet schema inference returns; their
 # values are part of every schema-cache key.
 _SCHEMA_CONFS = (

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import query
+from ..sources.io import completion_marker_exists, write_completion_marker
 
 # Shared between the engine expression and the DuckDB oracle string
 # (one source of truth — a drift here is a silent mirrored-scrub
@@ -833,18 +834,11 @@ _BM25_ORACLE = f"""
     """
 
 
-def _bm25_postings(docs: DataFrame, terms=None):
-    """Shared tokenize → doc-length → stats → (filtered) postings →
-    tf construction: ONE source of truth for the scan-path retrieval
-    stack (r11 review — this ~15-line pipeline existed verbatim in
-    bm25_topk, bm25_index_build, and hybrid_retrieval_rrf; a fix
-    applied to one copy would silently break the "identical result
-    set, same oracle" invariant the pruned/hybrid variants depend
-    on). With ``terms`` the explode is filtered to the query set
-    BEFORE any shuffle (only matching postings move); without, the
-    full tf table is built (the index-build path). Returns
-    (tf, stats): (doc_id, term, tf, dl) postings and the one-row
-    (n_docs, avgdl) corpus stats."""
+def _bm25_postings(docs: DataFrame):
+    """Tokenize → doc-length → stats → postings → tf construction for
+    the index build (`bm25_index_build`), the full tf table over every
+    term. Returns (tf, stats): (doc_id, term, tf, dl) postings and the
+    one-row (n_docs, avgdl) corpus stats."""
     toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
     base = docs.select("doc_id", toks.alias("t")).select(
         "doc_id", "t", F.size("t").cast("bigint").alias("dl")
@@ -854,8 +848,6 @@ def _bm25_postings(docs: DataFrame, terms=None):
         F.avg("dl").alias("avgdl"),
     )
     post = base.select("doc_id", "dl", F.explode("t").alias("term"))
-    if terms is not None:
-        post = post.filter(F.col("term").isin(*terms))
     tf = post.groupBy("doc_id", "term").agg(
         F.count(F.lit(1)).cast("bigint").alias("tf"),
         F.first("dl").alias("dl"),
@@ -1073,20 +1065,7 @@ def bm25_index_build(
     # open() would break the caller-owned-path contract for any
     # non-local scheme (s3a://, hdfs://) after the expensive writes
     # already succeeded.
-    fs, marker = _hadoop_fs_path(docs.sparkSession, f"{path}/_INDEX_COMPLETE")
-    out = fs.create(marker, True)
-    out.writeBytes(f"buckets={buckets}\n")
-    out.close()
-
-
-def _hadoop_fs_path(spark: SparkSession, path_str: str):
-    """(FileSystem, Path) for any URI scheme Spark itself can write —
-    the marker read/write must resolve paths the same way the parquet
-    writers do. (Canonical impl lives in sources.io since r8; this
-    name stays because the registered query sources call it.)"""
-    from ..sources.io import hadoop_fs_path
-
-    return hadoop_fs_path(spark, path_str)
+    write_completion_marker(docs.sparkSession, path, f"buckets={buckets}\n")
 
 
 def bm25_probe(
@@ -1153,8 +1132,7 @@ def bm25_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stats), never on postings/_SUCCESS alone: a crash between the
     # two writes must look like "not built" (ADVICE r6 #1). Checked
     # through the same Hadoop FS resolution the build writes with.
-    fs, marker = _hadoop_fs_path(spark, f"{path}/_INDEX_COMPLETE")
-    if not fs.exists(marker):
+    if not completion_marker_exists(spark, path):
         bm25_index_build(load_table(spark, sf_dir, "documents"), path)
     return bm25_probe(spark, path, list(_BM25_TERMS))
 
@@ -1526,7 +1504,7 @@ def _rrf_fuse(spark: SparkSession, sf_dir: str, lex: DataFrame) -> DataFrame:
 def hybrid_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid retrieval via Reciprocal Rank Fusion: the lexical list
     (BM25 over the fixed term set, identical score expression to
-    `bm25_topk` via the shared `_bm25_scored` core) and the semantic
+    `bm25_topk` via the shared `_bm25_scored_scan` path) and the semantic
     list (cosine against embedding 0, identical ranking discipline to
     `similarity_topk`) each rank to depth 20, then fuse as
     Σ 1/(k + rank), k=60 — the standard score-free combiner that
@@ -1582,8 +1560,7 @@ def hybrid_retrieval_rrf_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     path = _bm25_cached_index_path(sf_dir)
-    fs, marker = _hadoop_fs_path(spark, f"{path}/_INDEX_COMPLETE")
-    if not fs.exists(marker):
+    if not completion_marker_exists(spark, path):
         bm25_index_build(load_table(spark, sf_dir, "documents"), path)
     w_lex = Window.orderBy(F.col("bm25").desc(), "doc_id")
     lex = (

@@ -427,7 +427,7 @@ def embedding_neardup_pairs(
         "nrm", l2_norm(F.col("emb"))
     )
     sigs = rhp_signatures(
-        spark, big.select("vec_id", F.col("emb").alias("embedding")), _hyperplanes(dim, 32)
+        big.select("vec_id", F.col("emb").alias("embedding")), _hyperplanes(dim, 32)
     )
     banded = (
         big.join(sigs, "vec_id")

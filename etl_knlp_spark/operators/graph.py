@@ -655,11 +655,12 @@ def k_core(
         pruned = cur.join(keep, "u", "semi").join(
             keep.withColumnRenamed("u", "v"), "v", "semi"
         )
-        n = pruned.count()  # scalar fixpoint probe, never row data
+        nxt = pruned.localCheckpoint()
+        n = nxt.count()  # scalar fixpoint probe over the checkpoint
         if n == prev_edges:
             break
         prev_edges = n
-        cur = pruned.localCheckpoint()
+        cur = nxt
     else:
         raise RuntimeError(f"k_core: no fixpoint within {max_iter} rounds")
     return cur.groupBy("u").agg(
@@ -936,11 +937,12 @@ def k_truss(
             .filter(F.coalesce("support", F.lit(0)) >= k - 2)
             .select("a", "b")
         )
-        n = pruned.count()  # scalar fixpoint probe
+        nxt = pruned.localCheckpoint()
+        n = nxt.count()  # scalar fixpoint probe over the checkpoint
         if n == prev_n:
             break
         prev_n = n
-        cur = pruned.localCheckpoint()
+        cur = nxt
     else:
         raise RuntimeError(f"k_truss: no fixpoint within {max_iter} rounds")
     # final support, counted inside the converged truss

@@ -39,15 +39,6 @@ from pyspark.sql import types as T
 from ..catalog import load_table
 from ..registry import query
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-        T.StructField("media_type", T.StringType()),
-        T.StructField("n_bytes", T.LongType()),
-    ]
-)
-
 FEATURE_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
@@ -2047,8 +2038,9 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Shared result shape for every codec's corpus hash gate
-# (multimodal_decode/webp/gif/tiff/bmp/...): the Spark side encodes the
+# Shared result shape of every codec's corpus hash gate, all six of
+# which (multimodal_decode/webp/gif/bmp/tiff/flac) are one call to
+# `_decode_gate` below: the Spark side encodes the
 # UTF-8 BYTES of each document's first 64 CHARACTERS
 # (encode(substring(text, 1, 64))) while the DuckDB oracle recomputes
 # mean_px from the first 64 CODEPOINTS (ascii(substr(text, i, 1))).
@@ -2069,10 +2061,9 @@ DECODE_STATS_SCHEMA = T.StructType(
     ]
 )
 
-
-@query(
-    "multimodal_decode",
-    oracle="""
+# The five image gates' DuckDB oracle: (1, w, mean codepoint) over the
+# first w = min(64, length) characters of every non-empty document.
+_IMAGE_GATE_ORACLE = """
     SELECT doc_id AS media_id,
            1 AS img_h,
            LEAST(64, length(text))::INT AS img_w,
@@ -2082,8 +2073,47 @@ DECODE_STATS_SCHEMA = T.StructType(
                    'avg') * 10000 + 0.5) / 10000 AS mean_px
     FROM documents
     WHERE length(text) >= 1
-    """,
-)
+    """
+
+
+def _decode_gate(spark: SparkSession, sf_dir: str, decode, payload=None) -> DataFrame:
+    """One codec gate: for every document with non-empty text, run
+    ``decode`` on its payload bytes in an Arrow-batched mapInPandas
+    pass and emit (media_id, img_h, img_w, mean_px) — the decoded
+    array's first two dimensions and the mean of its channel 0
+    (``arr[..., 0]``), floor-rounded to 4 decimals engine-side.
+    ``payload`` is a Column over the documents row; it defaults to
+    the UTF-8 bytes of the first 64 characters, built here because a
+    module-level ``F.encode`` needs an active SparkContext. Map-side
+    only: payloads are built and decoded in one pass, nothing binary
+    shuffles."""
+    import numpy as np
+
+    docs = load_table(spark, sf_dir, "documents").filter(F.length("text") >= 1)
+    if payload is None:
+        payload = F.encode(F.substring("text", 1, 64), "UTF-8")
+    media = docs.select(F.col("doc_id").alias("media_id"), payload.alias("payload"))
+
+    def stats(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            out = []
+            for mid, p in zip(pdf["media_id"], pdf["payload"]):
+                arr = decode(bytes(p))
+                # UNROUNDED here: Python round() is banker's; the
+                # engine-side floor-form below (FLOOR(x*1e4 + 0.5))
+                # rounds the bit-identical double identically on both
+                # engines (r12 ROUND-over-exact-ratio class; r13
+                # conversion of the codec family)
+                mean = float(np.mean(arr[..., 0].astype("float64")))
+                out.append((mid, int(arr.shape[0]), int(arr.shape[1]), mean))
+            yield pd.DataFrame(out, columns=DECODE_STATS_SCHEMA.fieldNames())
+
+    return media.mapInPandas(stats, DECODE_STATS_SCHEMA).withColumn(
+        "mean_px", F.floor(F.col("mean_px") * 10000 + 0.5) / 10000.0
+    )
+
+
+@query("multimodal_decode", oracle=_IMAGE_GATE_ORACLE)
 def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The REAL decode path, driver-hash-verified end to end: each
     document's first 64 bytes become a 1×w grayscale binary PNM
@@ -2097,57 +2127,13 @@ def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Map-side only, like every payload kernel here: payloads are built
     and decoded inside one mapInPandas pass, nothing binary shuffles."""
-    import numpy as np
-
-    docs = load_table(spark, sf_dir, "documents").filter(F.length("text") >= 1)
     w = F.least(F.lit(64), F.length("text"))
     header = F.encode(F.format_string("P5\n%d 1\n255\n", w), "UTF-8")
     payload = F.concat(header, F.encode(F.substring("text", 1, 64), "UTF-8"))
-    media = docs.select(
-        F.col("doc_id").alias("media_id"), payload.alias("payload")
-    )
-
-    def stats(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                arr = _decode_pnm(bytes(p))
-                # UNROUNDED here: Python round() is banker's; the
-                # engine-side floor-form below (FLOOR(x*1e4 + 0.5))
-                # rounds the bit-identical double identically on both
-                # engines (r12 ROUND-over-exact-ratio class; r13
-                # conversion of the codec family)
-                out.append(
-                    (
-                        mid,
-                        int(arr.shape[0]),
-                        int(arr.shape[1]),
-                        float(np.mean(arr.astype("float64"))),
-                    )
-                )
-            yield pd.DataFrame(
-                out, columns=["media_id", "img_h", "img_w", "mean_px"]
-            )
-
-    return media.mapInPandas(stats, DECODE_STATS_SCHEMA).withColumn(
-        "mean_px", F.floor(F.col("mean_px") * 10000 + 0.5) / 10000.0
-    )
+    return _decode_gate(spark, sf_dir, _decode_pnm, payload)
 
 
-@query(
-    "multimodal_webp",
-    oracle="""
-    SELECT doc_id AS media_id,
-           1 AS img_h,
-           LEAST(64, length(text))::INT AS img_w,
-           FLOOR(list_aggregate(
-                   list_transform(generate_series(1, LEAST(64, length(text))),
-                                  i -> ascii(substr(text, i, 1))),
-                   'avg') * 10000 + 0.5) / 10000 AS mean_px
-    FROM documents
-    WHERE length(text) >= 1
-    """,
-)
+@query("multimodal_webp", oracle=_IMAGE_GATE_ORACLE)
 def multimodal_webp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-scale hash gate for the native VP8L (lossless WebP)
     decoder: each document's first 64 bytes become a real 1×w VP8L
@@ -2163,34 +2149,7 @@ def multimodal_webp(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Map-side only: payloads are built and decoded inside one
     mapInPandas pass, nothing binary shuffles."""
-    import numpy as np
-
-    docs = load_table(spark, sf_dir, "documents").filter(F.length("text") >= 1)
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.encode(F.substring("text", 1, 64), "UTF-8").alias("raw"),
-    )
-
-    def stats(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for mid, raw in zip(pdf["media_id"], pdf["raw"]):
-                arr = _decode_webp(_encode_vp8l_gray(bytes(raw)))
-                out.append(
-                    (
-                        mid,
-                        int(arr.shape[0]),
-                        int(arr.shape[1]),
-                        float(np.mean(arr[:, :, 0].astype("float64"))),
-                    )
-                )
-            yield pd.DataFrame(
-                out, columns=["media_id", "img_h", "img_w", "mean_px"]
-            )
-
-    return media.mapInPandas(stats, DECODE_STATS_SCHEMA).withColumn(
-        "mean_px", F.floor(F.col("mean_px") * 10000 + 0.5) / 10000.0
-    )
+    return _decode_gate(spark, sf_dir, lambda b: _decode_webp(_encode_vp8l_gray(b)))
 
 
 # ---------------------------------------------------------------------------
@@ -2584,16 +2543,6 @@ def _encode_flac_pcm16(data: bytes) -> bytes:
     return bytes(out) + frame
 
 
-AUDIO_STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("n_samples", T.IntegerType()),
-        T.StructField("n_channels", T.IntegerType()),
-        T.StructField("mean_sample", T.DoubleType()),
-    ]
-)
-
-
 @query(
     "multimodal_flac",
     oracle="""
@@ -2626,35 +2575,9 @@ def multimodal_flac(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Map-side only: payloads are built and decoded inside one
     mapInPandas pass, nothing binary shuffles."""
-    import numpy as np
-
-    docs = load_table(spark, sf_dir, "documents").filter(F.length("text") >= 1)
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.encode(F.substring("text", 1, 64), "UTF-8").alias("raw"),
-    )
-
-    def stats(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for mid, raw in zip(pdf["media_id"], pdf["raw"]):
-                arr = _decode_flac(_encode_flac_pcm16(bytes(raw)))
-                out.append(
-                    (
-                        mid,
-                        int(arr.shape[0]),
-                        int(arr.shape[1]),
-                        float(np.mean(arr[:, 0].astype("float64"))),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["media_id", "n_samples", "n_channels", "mean_sample"],
-            )
-
-    return media.mapInPandas(stats, AUDIO_STATS_SCHEMA).withColumn(
-        "mean_sample", F.floor(F.col("mean_sample") * 10000 + 0.5) / 10000.0
-    )
+    return _decode_gate(
+        spark, sf_dir, lambda b: _decode_flac(_encode_flac_pcm16(b))
+    ).toDF("media_id", "n_samples", "n_channels", "mean_sample")
 
 
 PITCH_SCHEMA = T.StructType(
@@ -2768,8 +2691,6 @@ def multimodal_pitch(spark: SparkSession, sf_dir: str) -> DataFrame:
 # and framing against hand-packed bytes INDEPENDENT of the encoder,
 # and a pillow cross-check runs where PIL is installed.
 # ---------------------------------------------------------------------------
-
-_GIF_TYPES = ("image/gif",)
 
 
 def _lzw_decode(data: bytes, mcs: int) -> bytes:
@@ -2988,20 +2909,7 @@ def _encode_gif_gray(data: bytes, interlaced: bool = False) -> bytes:
     return bytes(out)
 
 
-@query(
-    "multimodal_gif",
-    oracle="""
-    SELECT doc_id AS media_id,
-           1 AS img_h,
-           LEAST(64, length(text))::INT AS img_w,
-           FLOOR(list_aggregate(
-                   list_transform(generate_series(1, LEAST(64, length(text))),
-                                  i -> ascii(substr(text, i, 1))),
-                   'avg') * 10000 + 0.5) / 10000 AS mean_px
-    FROM documents
-    WHERE length(text) >= 1
-    """,
-)
+@query("multimodal_gif", oracle=_IMAGE_GATE_ORACLE)
 def multimodal_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-scale hash gate for the native GIF/LZW decoder (the
     `multimodal_webp` pattern): each document's first 64 bytes become
@@ -3013,34 +2921,7 @@ def multimodal_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     Any bit-order, width-growth, or clear-handling drift between the
     dual halves fails the hash. Map-side only — payloads never
     shuffle."""
-    import numpy as np
-
-    docs = load_table(spark, sf_dir, "documents").filter(F.length("text") >= 1)
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.encode(F.substring("text", 1, 64), "UTF-8").alias("raw"),
-    )
-
-    def stats(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for mid, raw in zip(pdf["media_id"], pdf["raw"]):
-                arr = _decode_gif(_encode_gif_gray(bytes(raw)))
-                out.append(
-                    (
-                        mid,
-                        int(arr.shape[0]),
-                        int(arr.shape[1]),
-                        float(np.mean(arr[:, :, 0].astype("float64"))),
-                    )
-                )
-            yield pd.DataFrame(
-                out, columns=["media_id", "img_h", "img_w", "mean_px"]
-            )
-
-    return media.mapInPandas(stats, DECODE_STATS_SCHEMA).withColumn(
-        "mean_px", F.floor(F.col("mean_px") * 10000 + 0.5) / 10000.0
-    )
+    return _decode_gate(spark, sf_dir, lambda b: _decode_gif(_encode_gif_gray(b)))
 
 
 # ---------------------------------------------------------------------------
@@ -3147,54 +3028,14 @@ def _encode_bmp_gray8(data: bytes, top_down: bool = False) -> bytes:
     return out + pal + pixels
 
 
-@query(
-    "multimodal_bmp",
-    oracle="""
-    SELECT doc_id AS media_id,
-           1 AS img_h,
-           LEAST(64, length(text))::INT AS img_w,
-           FLOOR(list_aggregate(
-                   list_transform(generate_series(1, LEAST(64, length(text))),
-                                  i -> ascii(substr(text, i, 1))),
-                   'avg') * 10000 + 0.5) / 10000 AS mean_px
-    FROM documents
-    WHERE length(text) >= 1
-    """,
-)
+@query("multimodal_bmp", oracle=_IMAGE_GATE_ORACLE)
 def multimodal_bmp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus hash gate for the native BMP decoder (the webp/gif
     pattern): first 64 text bytes → 8-bit paletted BMP via the
     forward dual → `_decode_bmp` (palette BGRA expansion, 4-byte row
     padding, bottom-up default) → (h, w, mean-R) stats vs DuckDB
     codepoint recomputation. Map-side only."""
-    import numpy as np
-
-    docs = load_table(spark, sf_dir, "documents").filter(F.length("text") >= 1)
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.encode(F.substring("text", 1, 64), "UTF-8").alias("raw"),
-    )
-
-    def stats(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for mid, raw in zip(pdf["media_id"], pdf["raw"]):
-                arr = _decode_bmp(_encode_bmp_gray8(bytes(raw)))
-                out.append(
-                    (
-                        mid,
-                        int(arr.shape[0]),
-                        int(arr.shape[1]),
-                        float(np.mean(arr[:, :, 0].astype("float64"))),
-                    )
-                )
-            yield pd.DataFrame(
-                out, columns=["media_id", "img_h", "img_w", "mean_px"]
-            )
-
-    return media.mapInPandas(stats, DECODE_STATS_SCHEMA).withColumn(
-        "mean_px", F.floor(F.col("mean_px") * 10000 + 0.5) / 10000.0
-    )
+    return _decode_gate(spark, sf_dir, lambda b: _decode_bmp(_encode_bmp_gray8(b)))
 
 
 # ---------------------------------------------------------------------------
@@ -3421,20 +3262,7 @@ def _encode_tiff_gray8(
     return out + strip
 
 
-@query(
-    "multimodal_tiff",
-    oracle="""
-    SELECT doc_id AS media_id,
-           1 AS img_h,
-           LEAST(64, length(text))::INT AS img_w,
-           FLOOR(list_aggregate(
-                   list_transform(generate_series(1, LEAST(64, length(text))),
-                                  i -> ascii(substr(text, i, 1))),
-                   'avg') * 10000 + 0.5) / 10000 AS mean_px
-    FROM documents
-    WHERE length(text) >= 1
-    """,
-)
+@query("multimodal_tiff", oracle=_IMAGE_GATE_ORACLE)
 def multimodal_tiff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus hash gate for the native TIFF reader: first 64 text
     bytes → LZW-compressed horizontal-predictor TIFF via the forward
@@ -3442,33 +3270,8 @@ def multimodal_tiff(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the EARLY width change — the opposite conventions of the GIF
     pair, so a sign error in either knob fails THIS hash while
     passing that one) → stats vs DuckDB codepoint recomputation."""
-    import numpy as np
-
-    docs = load_table(spark, sf_dir, "documents").filter(F.length("text") >= 1)
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.encode(F.substring("text", 1, 64), "UTF-8").alias("raw"),
-    )
-
-    def stats(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for mid, raw in zip(pdf["media_id"], pdf["raw"]):
-                arr = _decode_tiff(
-                    _encode_tiff_gray8(bytes(raw), lzw=True, predictor=True)
-                )
-                out.append(
-                    (
-                        mid,
-                        int(arr.shape[0]),
-                        int(arr.shape[1]),
-                        float(np.mean(arr[:, :, 0].astype("float64"))),
-                    )
-                )
-            yield pd.DataFrame(
-                out, columns=["media_id", "img_h", "img_w", "mean_px"]
-            )
-
-    return media.mapInPandas(stats, DECODE_STATS_SCHEMA).withColumn(
-        "mean_px", F.floor(F.col("mean_px") * 10000 + 0.5) / 10000.0
+    return _decode_gate(
+        spark,
+        sf_dir,
+        lambda b: _decode_tiff(_encode_tiff_gray8(b, lzw=True, predictor=True)),
     )

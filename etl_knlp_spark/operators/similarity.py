@@ -197,7 +197,7 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     return [[rng.choice((-1.0, 1.0)) for _ in range(dim)] for _ in range(n_planes)]
 
 
-def rhp_signatures(spark: SparkSession, vectors: DataFrame, planes: list[list[float]]) -> DataFrame:
+def rhp_signatures(vectors: DataFrame, planes: list[list[float]]) -> DataFrame:
     """Random-hyperplane signatures: bit j = sign(emb · plane_j),
     packed into one long per vector.
 
@@ -219,8 +219,7 @@ def rhp_signatures(spark: SparkSession, vectors: DataFrame, planes: list[list[fl
     where LSH bucketing is arbitrary anyway — every registered
     consumer's hashed contract columns are independent of such edge
     assignments (similarity.py contract; the dedup overflow route is
-    exact-verified downstream). `spark` is unused but kept so call
-    sites and the plan tests stay stable.
+    exact-verified downstream).
 
     Input must have (vec_id, embedding array<double>); output is
     (vec_id, sig long). NULL embeddings produce no signature row
@@ -285,7 +284,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     planes = _hyperplanes(_EMB_DIM, 16)
     e = e.withColumn("nrm", l2_norm(F.col("embedding")))
-    sigs = e.join(rhp_signatures(spark, e.select("vec_id", "embedding"), planes), "vec_id")
+    sigs = e.join(rhp_signatures(e.select("vec_id", "embedding"), planes), "vec_id")
     banded = sigs.select(
         "vec_id",
         "embedding",

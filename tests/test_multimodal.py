@@ -2136,3 +2136,60 @@ def test_codec_variant_payloads_survive_truncation_and_corruption():
                         (name, "mut", pos, val, type(exc).__name__, str(exc)[:50])
                     )
     assert not escapes, escapes[:10]
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "multimodal_decode",
+        "multimodal_webp",
+        "multimodal_gif",
+        "multimodal_bmp",
+        "multimodal_tiff",
+        "multimodal_flac",
+    ],
+)
+def test_codec_gate_matches_its_oracle_at_edge_lengths(spark, tmp_path, name):
+    """Each codec corpus gate against its registered DuckDB oracle on a
+    small ASCII documents table whose text lengths straddle the
+    gates' edges: empty (filtered on both sides), 1 and 2 (under the
+    FLAC encoder's 3-sample zero padding, mirrored by the oracle's
+    GREATEST(3, ·)), 3, 64 (the full prefix) and 100 (cut to 64).
+    Compared by the correctness gate's own row count, column names
+    and value hash (tools/verify_oracles), so the test replays the
+    sweep's comparison on inputs the graded corpus may not contain."""
+    import importlib.util
+    import os
+
+    import duckdb
+    import pandas as pd
+
+    from etl_knlp_spark import registry
+
+    spec = importlib.util.spec_from_file_location(
+        "verify_oracles",
+        os.path.join(os.path.dirname(__file__), "..", "tools", "verify_oracles.py"),
+    )
+    verify_oracles = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(verify_oracles)
+
+    alphabet = "".join(chr(c) for c in range(32, 127))
+    texts = ["", "a", "~!", "Zq9"] + [
+        (alphabet * 2)[i : i + n] for i, n in ((3, 64), (40, 100), (7, 64))
+    ]
+    sf = str(tmp_path)
+    pd.DataFrame(
+        {"doc_id": pd.array(range(len(texts)), dtype="int64"), "text": texts}
+    ).to_parquet(f"{sf}/documents.parquet", index=False)
+
+    registry._load_all()
+    rq = registry._REGISTRY[name]
+    got = rq.fn(spark, sf).toPandas()
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{sf}/documents.parquet')"
+    )
+    want = con.execute(rq.oracle).df()
+    assert len(got) == len(want) == len(texts) - 1
+    assert sorted(got.columns) == sorted(want.columns)
+    assert verify_oracles.value_hash(got) == verify_oracles.value_hash(want)

@@ -345,7 +345,7 @@ def test_rhp_signatures_matmul_kernel_contract(spark):
         (4, None),         # NULL embedding -> no signature row
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = {r["vec_id"]: r["sig"] for r in rhp_signatures(spark, df, planes).collect()}
+    out = {r["vec_id"]: r["sig"] for r in rhp_signatures(df, planes).collect()}
     assert out == {1: 3, 2: 2, 3: 7}
 
     # an input whose rows are ALL null must yield an empty result,
@@ -353,7 +353,7 @@ def test_rhp_signatures_matmul_kernel_contract(spark):
     all_null = spark.createDataFrame(
         [(9, None)], "vec_id long, embedding array<double>"
     )
-    assert rhp_signatures(spark, all_null, planes).count() == 0
+    assert rhp_signatures(all_null, planes).count() == 0
 
 
 def test_rhp_signatures_names_ragged_embeddings(spark):
@@ -369,7 +369,7 @@ def test_rhp_signatures_names_ragged_embeddings(spark):
         "vec_id long, embedding array<double>",
     ).coalesce(1)
     with pytest.raises(Exception) as ei:
-        rhp_signatures(spark, ragged, planes).collect()
+        rhp_signatures(ragged, planes).collect()
     msg = str(ei.value)
     assert "rhp_signatures" in msg
     assert "2" in msg  # the plane dimension named
@@ -379,5 +379,5 @@ def test_rhp_signatures_names_ragged_embeddings(spark):
         [(7, [1.0, 2.0, 3.0])], "vec_id long, embedding array<double>"
     )
     with pytest.raises(Exception) as ei2:
-        rhp_signatures(spark, uniform_wrong, planes).collect()
+        rhp_signatures(uniform_wrong, planes).collect()
     assert "rhp_signatures" in str(ei2.value)

@@ -52,27 +52,17 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession  # noqa: E402
 
-from etl_knlp_spark.session import tune_session  # noqa: E402
+from etl_knlp_spark.session import get_spark, tune_session  # noqa: E402
 from verify_oracles import run_sweep  # noqa: E402
 
 
-def _layout_session(name: str, master: str, layout: dict[str, str]) -> SparkSession:
-    """A session with ``layout`` on top of the probe's base settings. The
-    first table load tunes every session to the engine's defaults
-    (``session.tune_session``); tune this one now and put the layout's
-    runtime confs back, so the queries run under the layout and not
-    under the defaults."""
-    builder = (
-        SparkSession.builder.appName(name)
-        .master(master)
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-    )
-    for k, v in layout.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+def _layout_session(name: str, cpus: int, layout: dict[str, str]) -> SparkSession:
+    """A ``local[cpus]`` engine session (``session.get_spark``) with
+    ``layout`` on top. The first table load tunes every session to the
+    engine's defaults (``session.tune_session``); tune this one now and
+    put the layout's runtime confs back, so the queries run under the
+    layout and not under the defaults."""
+    spark = get_spark(name, cpus=cpus, extra_conf=layout)
     tune_session(spark)
     for k, v in layout.items():
         if spark.conf.isModifiable(k):
@@ -82,7 +72,7 @@ def _layout_session(name: str, master: str, layout: dict[str, str]) -> SparkSess
 
 def perturbed_session() -> SparkSession:
     """Many small misaligned partitions, no AQE, no broadcasts."""
-    return _layout_session("determinism_probe", "local[5]", {
+    return _layout_session("determinism_probe", 5, {
         "spark.sql.adaptive.enabled": "false",
         "spark.sql.shuffle.partitions": "7",
         "spark.default.parallelism": "3",
@@ -96,7 +86,7 @@ def serial_session() -> SparkSession:
     """Fully-serial single-partition extreme: one thread, one shuffle
     partition, whole-file splits — reductions left-fold in scan order
     and Python kernels see maximal batches."""
-    return _layout_session("determinism_probe_serial", "local[1]", {
+    return _layout_session("determinism_probe_serial", 1, {
         "spark.sql.adaptive.enabled": "false",
         "spark.sql.shuffle.partitions": "1",
         "spark.default.parallelism": "1",

@@ -492,7 +492,7 @@ def main() -> None:
         e = load_table(spark, sf, "embeddings").select(
             "vec_id", as_double(F.col("embedding")).alias("embedding")
         )
-        return rhp_signatures(spark, e, _hyperplanes(_EMB_DIM, 16))
+        return rhp_signatures(e, _hyperplanes(_EMB_DIM, 16))
 
     def _incremental_screen(spark, sf):
         from pyspark.sql import functions as F
