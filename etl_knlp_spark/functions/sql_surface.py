@@ -238,8 +238,8 @@ def sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The loop runs ON the cluster per iteration (each SET's scalar
     subquery is a distributed aggregate); only two scalars cross the
-    driver per round — the same bounded-sync shape as the Lloyd
-    iterations in ivf.py. The scripting conf is scoped and restored
+    driver per round — the bounded-sync shape of an iterative Spark
+    aggregate. The scripting conf is scoped and restored
     (session-wide conf leaks bit a previous round — see
     sources/layout.py)."""
     register_views(spark, sf_dir)

@@ -305,7 +305,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def embedding_neardup_pairs(
-    spark: SparkSession,
     e: DataFrame,
     threshold: float = 0.35,
     max_block: int | None = 4096,
@@ -493,7 +492,7 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     # max_block=None: testdata block sizes are pinned (≤218 rows/label,
     # verified by the oracle itself) — static stats replace the
     # block-size scan, compiling the plain blocked join with no extra job
-    return embedding_neardup_pairs(spark, e, max_block=None)
+    return embedding_neardup_pairs(e, max_block=None)
 
 
 # ---- MinHash + LSH --------------------------------------------------------
@@ -1902,14 +1901,16 @@ def semantic_dedup_sets(
     rule — deterministic, no RNG). Returns (vec_id, removed boolean,
     rep_id nullable — the lowest-id in-block partner).
 
-    Scale design: training is `ivf.kmeans_fit` (bounded hash-residue
-    sample); blocking is one broadcast-centroid pass (no shuffle of
-    the corpus beyond the per-block self-join, whose fan-out is
-    bounded by nprobe × block size — at 100 TB, k grows with n so
-    blocks stay bounded, same regime as `dedup_embedding`'s 4096-cap
-    label blocks). Clusters only ever RESTRICT which pairs are
-    compared, so precision is exact by construction; recall vs the
-    global quadratic pair set is the contract's measured quantity.
+    Scale design: training is `ivf.kmeans_fit` — the bounded
+    hash-residue sample collected once and `ivf.lloyd` run on the
+    driver, no Spark job per iteration; blocking is one
+    broadcast-centroid pass (no shuffle of the corpus beyond the
+    per-block self-join, whose fan-out is bounded by nprobe × block
+    size — at 100 TB, k grows with n so blocks stay bounded, same
+    regime as `dedup_embedding`'s 4096-cap label blocks). Clusters
+    only ever RESTRICT which pairs are compared, so precision is exact
+    by construction; recall vs the global quadratic pair set is the
+    contract's measured quantity.
     """
     from pyspark.sql import Window
 

@@ -932,30 +932,24 @@ def k_truss(
             .groupBy("a", "b")
             .agg(F.count(F.lit(1)).alias("support"))
         )
-        pruned = (
+        # the round's support rides in its checkpoint: at the fixpoint
+        # it is the support counted inside the converged truss
+        nxt = (
             cur.join(sup, ["a", "b"], "left")
             .filter(F.coalesce("support", F.lit(0)) >= k - 2)
-            .select("a", "b")
+            .localCheckpoint()
         )
-        nxt = pruned.localCheckpoint()
         n = nxt.count()  # scalar fixpoint probe over the checkpoint
         if n == prev_n:
             break
         prev_n = n
-        cur = nxt
+        cur = nxt.select("a", "b")
     else:
         raise RuntimeError(f"k_truss: no fixpoint within {max_iter} rounds")
-    # final support, counted inside the converged truss
-    sym = cur.select(F.col("a").alias("u"), F.col("b").alias("v")).union(
-        cur.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    )
-    s1 = sym.select(F.col("u").alias("a1"), F.col("v").alias("w1"))
-    s2 = sym.select(F.col("u").alias("b2"), F.col("v").alias("w2"))
-    return (
-        cur.join(s1, cur.a == s1.a1)
-        .join(s2, (cur.b == s2.b2) & (F.col("w1") == F.col("w2")))
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("support"))
+    # an edge in no triangle (kept only when k <= 2) has NULL support;
+    # it is not part of the result, as the inner-join count never saw it
+    return nxt.filter(F.col("support").isNotNull()).select(
+        "a", "b", F.col("support").cast("bigint").alias("support")
     )
 
 

@@ -2,11 +2,13 @@
 cluster-probed search (SURVEY.md §2.12 — the scale path alternative to
 random-hyperplane LSH in `similarity.py`).
 
-Build: Lloyd's k-means over DataFrames. Assignment and distance are
-distributed column expressions; only the k×dim centroid table (bounded,
-~16×64 doubles here) syncs through the driver per iteration — the same
-bounded-aggregate pattern MLlib's k-means uses. Deterministic: seeded
-init (first k vec_ids), min-struct tie-breaks.
+Build: the capped training sample (`training_sample`, ≤ ~1024 rows)
+is collected once and `lloyd` trains the codebook on the driver — no
+Spark job per iteration. The same function trains PQ subspace
+codebooks (pq.py) and semantic-dedup blocks (dedup.py). Assigning the
+full corpus to the trained centroids stays a distributed column
+expression (`_assign`). Deterministic: init = first k vec_ids,
+lowest-id tie-breaks, means summed in vec_id order.
 
 Search: a query probes the `nprobe` nearest centroids and brute-forces
 only those clusters — at 100 TB the corpus is stored partitioned by
@@ -16,6 +18,7 @@ does the rest).
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -32,14 +35,15 @@ _TRAIN_CAP = 1024
 
 
 def training_sample(vectors: DataFrame, cap: int = _TRAIN_CAP) -> DataFrame:
-    """Deterministic bounded training set for Lloyd's iterations: keep
+    """Deterministic bounded training set for `lloyd`: keep
     rows whose xxhash64(vec_id) lands in one of ``ceil(n/cap)`` residue
-    classes. One cheap count pass up front; after that, every training
-    iteration touches ≤ ~cap rows no matter how large the corpus is —
-    the full corpus is read exactly once more, by the final assignment
-    pass. (Without this, k-means training is max_iter full-corpus
-    passes; at 100 TB that is the dominant cost and the sample changes
-    centroid quality only marginally — the standard IVF/PQ recipe.)
+    classes. One cheap count pass up front; after that, training
+    collects ≤ ~cap rows to the driver no matter how large the corpus
+    is — the full corpus is read exactly once more, by the final
+    assignment pass. (Without this, training would collect the whole
+    corpus to the driver, impossible at 100 TB, while the sample
+    changes centroid quality only marginally — the standard IVF/PQ
+    recipe.)
     Deterministic given the data: no RNG, hash-residue selection."""
     n = vectors.count()
     if n <= cap:
@@ -69,24 +73,19 @@ def _ordered_sum(key_col: str, val_col: str):
     but the fold order silently becomes ascending (key, value) rather
     than the documented ascending-key order. Every current caller
     satisfies this by construction: ADC groups hold one row per
-    subspace (key = sub), Lloyd's mean groups hold one row per sampled
-    vector (key = vec_id).
+    subspace (key = sub), BM25 score groups one row per term.
 
     PRECONDITION (r14 ADVICE): ``val_col`` must be NON-NULL. This fold
     does NOT share F.sum/F.avg's null-skipping semantics: a null value
     survives collect_list (the enclosing struct is non-null) and
-    ``acc + null`` poisons the whole group's sum — and `_ordered_mean`
-    divides by F.count(val_col), which DOES skip nulls, so the two
-    would disagree even if the sum were patched to skip. Every current
-    caller is non-null by construction (ADC partials and Lloyd's
-    coordinates are arithmetic over required columns); a caller with
-    nullable values must filter them out first and decide explicitly
-    what the mean's denominator should be.
+    ``acc + null`` poisons the whole group's sum. Every current caller
+    is non-null by construction (ADC partials and BM25 contributions
+    are arithmetic over required columns); a caller with nullable
+    values must filter them out first.
 
     The collect_list buffer is bounded by the group size — callers
     only apply this to groups bounded by construction (m ≤ 8 subspace
-    partials; ≤ train_cap sampled training rows per centroid
-    dimension)."""
+    partials per vector; the terms of one document)."""
     return F.aggregate(
         F.transform(
             F.array_sort(F.collect_list(F.struct(key_col, val_col))),
@@ -95,17 +94,6 @@ def _ordered_sum(key_col: str, val_col: str):
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
-
-
-def _ordered_mean(key_col: str, val_col: str):
-    """Layout-independent mean: `_ordered_sum / count`. F.avg(double)
-    is a shuffle-arrival-order float fold — harmless where the mean is
-    a tolerance-checked output, but Lloyd's TRAINING means decide
-    centroids that every downstream assignment, code, and ADC score
-    reproduces, so codebooks must be bit-identical across layouts
-    (r13 verdict latent item #2). Same unique-key precondition as
-    `_ordered_sum`."""
-    return _ordered_sum(key_col, val_col) / F.count(val_col)
 
 
 def _sq_dist(a, b):
@@ -135,6 +123,50 @@ def _assign(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
     )
 
 
+def lloyd(X: np.ndarray, k: int, max_iter: int) -> dict[int, np.ndarray]:
+    """Lloyd's k-means on the driver over ``X``, the training sample as
+    a float64 matrix sorted by vec_id; returns {cluster_id: centroid}.
+    The one trainer for IVF, PQ subspaces and semantic dedup, with the
+    semantics of the Spark loop it replaced, bit for bit:
+
+    - init = the first k rows (the k lowest vec_ids), ids 0..k-1;
+    - distance folds ``acc + (x - c)²`` one dimension at a time in
+      array order from 0.0, as `_sq_dist`'s zip_with fold does;
+    - equal distances go to the lowest cluster id (argmin takes the
+      first of the sorted ids);
+    - a cluster left without members is dropped from the table;
+    - each mean is a sequential sum in vec_id order from 0.0, divided
+      by the count. numpy's sum/mean add pairwise, which moves the
+      last bits, so the sum is a cumsum (sequential) over the rows
+      with a leading 0.0 row."""
+    cents = dict(enumerate(X[:k]))
+    for _ in range(max_iter):
+        if not cents:
+            break
+        ids = np.array(sorted(cents))
+        C = np.array([cents[c] for c in ids])
+        D = np.zeros((len(X), len(ids)))
+        for j in range(X.shape[1]):
+            D = D + np.square(X[:, j, None] - C[None, :, j])
+        label = ids[D.argmin(axis=1)]
+        cents = {}
+        for c in np.unique(label):  # only clusters that kept members
+            rows = np.vstack((np.zeros(X.shape[1]), X[label == c]))
+            cents[int(c)] = np.cumsum(rows, axis=0)[-1] / (len(rows) - 1)
+    return cents
+
+
+def collect_sample(vectors: DataFrame, train_cap: int = _TRAIN_CAP) -> np.ndarray:
+    """`training_sample` collected as a float64 matrix sorted by vec_id
+    (≤ ~train_cap rows — one bounded driver sync; sorted on the driver,
+    as a Spark sort would add a range-sampling job)."""
+    rows = training_sample(vectors, train_cap).select("vec_id", "emb").collect()
+    if not rows:
+        return np.empty((0, 0))
+    rows.sort(key=lambda r: r["vec_id"])
+    return np.array([r["emb"] for r in rows], dtype=np.float64)
+
+
 def kmeans_fit(
     spark: SparkSession,
     vectors: DataFrame,
@@ -142,62 +174,18 @@ def kmeans_fit(
     max_iter: int = 5,
     train_cap: int = _TRAIN_CAP,
 ) -> DataFrame:
-    """Lloyd's k-means; returns the centroid table (cluster_id,
-    centroid array<double>). Init = the k lowest vec_ids of the
-    training sample (seeded and deterministic; k-means|| would replace
-    this at real scale). Training runs on `training_sample(vectors,
-    train_cap)` so iteration cost is bounded by the cap, not the
-    corpus; callers assign the full corpus once against the result."""
-    # The bounded (≤ train_cap rows) training sample is persisted so
-    # the init collect and each Lloyd iteration re-read cached batches
-    # instead of re-running scan → cast → hash-residue sample per pass
-    # (r15 optimization — the same discipline pq_train already applies
-    # to its subvector table; 5 iterations re-scanned the corpus 6×
-    # here). Values are unchanged: training_sample is deterministic.
-    train = training_sample(vectors, train_cap).persist()
-    # try/finally (r15 ADVICE): a failure in the init collect or any
-    # Lloyd iteration must not leak the cached sample for the session
-    # lifetime.
-    try:
-        init = (
-            train.orderBy("vec_id")
-            .limit(k)
-            .collect()
-        )
-        centroids = spark.createDataFrame(
-            [(i, list(r["emb"])) for i, r in enumerate(init)],
-            "cluster_id INT, centroid ARRAY<DOUBLE>",
-        )
-        for _ in range(max_iter):
-            assigned = _assign(train, centroids)
-            # per-dimension means, long-form, then re-pack ordered arrays.
-            # The mean is an _ordered_mean keyed by vec_id (unique within
-            # each (cluster, pos) group, ≤ train_cap rows by construction):
-            # F.avg would fold in shuffle-arrival order and the centroid
-            # table is reproduced by every downstream assignment, so the
-            # codebook must be bit-identical across layouts.
-            new_rows = (
-                assigned.select(
-                    "cluster_id", "vec_id", F.posexplode("emb").alias("pos", "v")
-                )
-                .groupBy("cluster_id", "pos")
-                .agg(_ordered_mean("vec_id", "v").alias("m"))
-                .groupBy("cluster_id")
-                .agg(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                        lambda s: s["m"],
-                    ).alias("centroid")
-                )
-                .collect()  # k rows × dim doubles — bounded driver sync
-            )
-            centroids = spark.createDataFrame(
-                [(r["cluster_id"], r["centroid"]) for r in new_rows],
-                "cluster_id INT, centroid ARRAY<DOUBLE>",
-            )
-    finally:
-        train.unpersist()
-    return centroids
+    """k-means centroid table (cluster_id INT, centroid ARRAY<DOUBLE>):
+    `lloyd` over `training_sample(vectors, train_cap)`, collected once,
+    so training cost is bounded by the cap, not the corpus, and runs
+    no Spark job per iteration; callers assign the full corpus once
+    against the result. Init = the k lowest vec_ids of the sample
+    (seeded and deterministic; k-means|| would replace this at real
+    scale)."""
+    cents = lloyd(collect_sample(vectors, train_cap), k, max_iter)
+    return spark.createDataFrame(
+        [(c, v.tolist()) for c, v in sorted(cents.items())],
+        "cluster_id INT, centroid ARRAY<DOUBLE>",
+    )
 
 
 def ivf_build(spark: SparkSession, embeddings: DataFrame, k: int = _K) -> tuple[DataFrame, DataFrame]:
@@ -206,6 +194,16 @@ def ivf_build(spark: SparkSession, embeddings: DataFrame, k: int = _K) -> tuple[
     vectors = embeddings.select("vec_id", as_double(F.col("embedding")).alias("emb"))
     centroids = kmeans_fit(spark, vectors, k=k)
     return _assign(vectors, centroids), centroids
+
+
+def query_set(vectors: DataFrame) -> DataFrame:
+    """The ANN query set: the `_N_QUERIES` lowest vec_ids of ``vectors``
+    (vec_id, emb) as (query_id, q_emb, q_nrm)."""
+    return (
+        vectors.filter(F.col("vec_id") < _N_QUERIES)
+        .withColumn("q_nrm", l2_norm(F.col("emb")))
+        .select(F.col("vec_id").alias("query_id"), F.col("emb").alias("q_emb"), "q_nrm")
+    )
 
 
 def ivf_search(
@@ -256,15 +254,7 @@ def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     5 Lloyd iterations) + 4-cluster probe per query."""
     e = load_table(spark, sf_dir, "embeddings")
     assigned, centroids = ivf_build(spark, e)
-    queries = (
-        assigned.filter(F.col("vec_id") < _N_QUERIES)
-        .withColumn("q_nrm", l2_norm(F.col("emb")))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("emb").alias("q_emb"),
-            "q_nrm",
-        )
-    )
+    queries = query_set(assigned)
     return ivf_search(assigned, centroids, queries)
 
 
@@ -295,15 +285,7 @@ def ivf_pruned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
     path = os.path.join(tempfile.gettempdir(), f"etl_knlp_ivf_{tag}")
     ivf_write_partitioned(assigned, path)
-    queries = (
-        assigned.filter(F.col("vec_id") < _N_QUERIES)
-        .withColumn("q_nrm", l2_norm(F.col("emb")))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("emb").alias("q_emb"),
-            "q_nrm",
-        )
-    )
+    queries = query_set(assigned)
     stored = spark.read.parquet(path)
     return ivf_search(stored, centroids, queries)
 

@@ -9,11 +9,11 @@ query stays exact, a per-query lookup table of subspace partial dot
 products is broadcast, and each corpus vector's score is the sum of m
 table lookups — no float vector ever leaves storage at query time.
 
-Everything is DataFrame-native: subspace k-means runs jointly across
-all m subspaces as one Lloyd's loop keyed by (sub, cluster) (only the
-m×ksub×(d/m) centroid table syncs through the driver per iteration, the
-same bounded pattern as ivf.kmeans_fit), encoding is a broadcast join +
-argmin, and ADC is an m-row-per-vector join against the broadcast LUT.
+Training collects the capped sample once and runs `ivf.lloyd` on the
+driver per subspace slice (the trainer IVF and semantic dedup share);
+everything that touches the corpus is DataFrame-native: encoding is a
+broadcast join + argmin, and ADC is an m-row-per-vector join against
+the broadcast LUT.
 At 100 TB the codes table (m bytes/vector) is what shuffles — the
 float corpus is touched only by the optional exact re-rank of the
 shortlist, a point-lookup join.
@@ -31,20 +31,20 @@ from ..catalog import load_table
 from ..functions.vector import as_double, dot, l2_norm
 from ..registry import query
 from . import similarity as _sim
-from .ivf import _TRAIN_CAP, _ordered_mean, _ordered_sum, training_sample
+from .ivf import (
+    _N_QUERIES,
+    _TRAIN_CAP,
+    _ordered_sum,
+    _sq_dist,
+    collect_sample,
+    lloyd,
+    query_set,
+)
 
 _M = 8        # subspaces
 _KSUB = 16    # centroids per subspace
 _TOP_K = 10
 _SHORTLIST = 40
-_N_QUERIES = 5
-
-
-# `_ordered_sum` (r13 review fix for the ADC group-sums) and
-# `_ordered_mean` (r14: Lloyd's training means, the same class one
-# step upstream) are shared with ivf.py — canonical definitions and
-# the unique-key precondition live there. Re-imported above so
-# existing callers/tests keep resolving pq._ordered_sum.
 
 
 def _subvectors(vectors: DataFrame, m: int) -> DataFrame:
@@ -63,14 +63,6 @@ def _subvectors(vectors: DataFrame, m: int) -> DataFrame:
             (F.col("sub") * d_over_m + 1).cast("int"),
             d_over_m.cast("int"),
         ).alias("semb"),
-    )
-
-
-def _sq_dist(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
     )
 
 
@@ -101,63 +93,22 @@ def pq_train(
     max_iter: int = 4,
     train_cap: int = _TRAIN_CAP,
 ) -> DataFrame:
-    """Train the PQ codebook: per-subspace Lloyd's k-means run JOINTLY
-    for all m subspaces in each distributed pass (keys are
-    (sub, code); one assignment join + one mean-recompute per
-    iteration regardless of m). Returns (sub, code, centroid
-    array<double>). Init is seeded/deterministic: subvectors of the
-    ksub lowest vec_ids in the training sample."""
-    # Codebooks train on `ivf.training_sample` — a deterministic
-    # hash-residue sample bounded by `train_cap` — and the bounded
-    # subvector table is persisted so each Lloyd iteration re-reads
-    # cached Arrow batches instead of re-scanning + re-slicing. The
-    # full corpus is touched only by `pq_encode`, exactly once.
-    train = training_sample(vectors, train_cap)
-    subs = _subvectors(train, m).persist()
-    init = (
-        subs.filter(
-            F.col("vec_id").isin(
-                [r["vec_id"] for r in train.select("vec_id").orderBy("vec_id").limit(ksub).collect()]
-            )
-        )
-        .withColumn(
-            "code",
-            F.row_number().over(Window.partitionBy("sub").orderBy("vec_id")) - 1,
-        )
-        .select("sub", "code", F.col("semb").alias("centroid"))
-        .collect()
-    )
-    codebook = spark.createDataFrame(
-        [(r["sub"], r["code"], list(r["centroid"])) for r in init],
-        "sub INT, code INT, centroid ARRAY<DOUBLE>",
-    )
-    for _ in range(max_iter):
-        assigned = _assign_codes(subs, codebook)
-        # _ordered_mean keyed by vec_id (unique within each
-        # (sub, code, pos) group; ≤ train_cap rows by construction) —
-        # F.avg folds in shuffle-arrival order, and the codebook these
-        # means become is reproduced by every downstream code
-        # assignment and ADC score, so it must be bit-identical across
-        # layouts (r13 verdict latent item #2).
-        new_rows = (
-            assigned.select("sub", "code", "vec_id", F.posexplode("semb").alias("pos", "v"))
-            .groupBy("sub", "code", "pos")
-            .agg(_ordered_mean("vec_id", "v").alias("mean_v"))
-            .groupBy("sub", "code")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "mean_v"))),
-                    lambda s: s["mean_v"],
-                ).alias("centroid")
-            )
-            .collect()  # m×ksub rows × d/m doubles — bounded driver sync
-        )
-        codebook = spark.createDataFrame(
-            [(r["sub"], r["code"], r["centroid"]) for r in new_rows],
-            "sub INT, code INT, centroid ARRAY<DOUBLE>",
-        )
-    subs.unpersist()
-    return codebook
+    """Train the PQ codebook: `ivf.lloyd` once per subspace over the
+    slices of the capped training sample, collected once (no Spark job
+    per iteration). Returns (sub, code, centroid array<double>). Init
+    is seeded/deterministic: the subvectors of the ksub lowest vec_ids
+    in the sample, code = rank by vec_id. Slices follow `_subvectors`
+    (start ⌊sub·d/m⌋, length ⌊d/m⌋), so `pq_encode` codes the same
+    subspaces the codebook was trained on; the full corpus is touched
+    only by `pq_encode`, exactly once."""
+    X = collect_sample(vectors, train_cap)
+    d_over_m = X.shape[1] / m
+    rows = []
+    for sub in range(m):
+        start = int(sub * d_over_m + 1) - 1
+        cents = lloyd(X[:, start : start + int(d_over_m)], ksub, max_iter)
+        rows += [(sub, c, v.tolist()) for c, v in sorted(cents.items())]
+    return spark.createDataFrame(rows, "sub INT, code INT, centroid ARRAY<DOUBLE>")
 
 
 def pq_encode(vectors: DataFrame, codebook: DataFrame, m: int = _M) -> DataFrame:
@@ -278,18 +229,14 @@ def pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     0.70 → 0.52 overall from 500 → 2 000 vectors at shortlist=40;
     back to ~0.7 once scaled), because ADC error displaces a roughly
     constant FRACTION of true neighbors past any fixed cut. The count
-    is one cheap metadata-ish job next to the 4 Lloyd training rounds.
+    is one cheap metadata-ish job next to the bounded training collect.
     """
     e = load_table(spark, sf_dir, "embeddings")
     vectors = e.select("vec_id", as_double(F.col("embedding")).alias("emb"))
     shortlist = max(_SHORTLIST, vectors.count() // 20)
     codebook = pq_train(spark, vectors)
     codes = pq_encode(vectors, codebook)
-    queries = (
-        vectors.filter(F.col("vec_id") < _N_QUERIES)
-        .withColumn("q_nrm", l2_norm(F.col("emb")))
-        .select(F.col("vec_id").alias("query_id"), F.col("emb").alias("q_emb"), "q_nrm")
-    )
+    queries = query_set(vectors)
     return pq_search_rerank(
         spark, vectors, codes, codebook, queries, shortlist=shortlist
     )
@@ -373,11 +320,7 @@ def pq_pruned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = corpus_cache_path(sf_dir, "embeddings", f"pq_index_m{_M}k{_KSUB}")
     if not completion_marker_exists(spark, path):
         pq_index_build(spark, vectors, path)
-    queries = (
-        vectors.filter(F.col("vec_id") < _N_QUERIES)
-        .withColumn("q_nrm", l2_norm(F.col("emb")))
-        .select(F.col("vec_id").alias("query_id"), F.col("emb").alias("q_emb"), "q_nrm")
-    )
+    queries = query_set(vectors)
     # same corpus-scaled shortlist as pq_topk (fixed cuts lose recall
     # as N grows — see pq_topk's measured note)
     shortlist = max(_SHORTLIST, vectors.count() // 20)

@@ -170,7 +170,7 @@ def test_embedding_block_cap_routes_through_lsh(spark):
     e = spark.createDataFrame(
         rows, "vec_id long, label string, emb array<double>"
     )
-    pairs = embedding_neardup_pairs(spark, e, threshold=0.95, max_block=50)
+    pairs = embedding_neardup_pairs(e, threshold=0.95, max_block=50)
     got = {(r["vec_a"], r["vec_b"]) for r in pairs.collect()}
     # LSH route: identical vectors collide on all 4 bands → all 10
     # injected dup pairs found despite the 170-row "hot" block never

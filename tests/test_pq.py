@@ -243,9 +243,9 @@ def test_training_codebooks_are_layout_independent(spark):
     plain F.avg(double) folds — shuffle-arrival order — so two layouts
     of the same training rows could disagree in the last ulp, and a
     codebook ulp propagates into every downstream code assignment and
-    ADC score. With `_ordered_mean` (sum in ascending vec_id order /
-    count) the codebook is bit-identical no matter how the input is
-    partitioned or ordered. Exercised for BOTH trainers (pq_train and
+    ADC score. `ivf.lloyd` sums in ascending vec_id order over the
+    collected sample, so the codebook is bit-identical no matter how
+    the input is partitioned or ordered. Exercised for BOTH trainers (pq_train and
     ivf.kmeans_fit) across three presentation layouts that bracket the
     determinism matrix: natural-order many-partition, reversed
     single-partition, and interleaved odd-partition with a different

@@ -837,7 +837,7 @@ def _import_map(importing_file, trees, module_imports):
     `from X import y [as z]` visible to the scan: the module's
     top-level ImportFrom nodes plus any ImportFrom INSIDE the scanned
     function trees (the engine uses both styles — pq.py imports
-    _ordered_mean at module level, analysis.py imports _ordered_sum
+    _ordered_sum at module level, analysis.py imports _ordered_sum
     inside the function body)."""
     nodes = list(module_imports)
     for t in trees:
