@@ -1,5 +1,5 @@
 """Per-corpus local index cache paths, shared by every persisted-index
-query entry (bm25_pruned, similarity_pq_pruned).
+query entry (bm25_pruned, similarity_pq_pruned, similarity_ivf_pruned).
 
 A cached index lets repeated queries against an UNCHANGED corpus skip
 the build entirely — the probe-only steady state that makes persisted

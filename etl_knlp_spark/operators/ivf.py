@@ -22,6 +22,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cache import corpus_cache_path
 from ..catalog import load_table
 from ..functions.vector import as_double, dot, l2_norm
 from ..registry import query
@@ -274,16 +275,11 @@ def ivf_pruned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     IN (...) filter prunes at directory listing (PartitionFilters;
     pinned in tests). Results are identical to the in-memory probe
     (`similarity_ivf`) by construction: tests compare the two."""
-    import hashlib
-    import os
-    import tempfile
-
     e = load_table(spark, sf_dir, "embeddings")
     assigned, centroids = ivf_build(spark, e)
-    # deterministic per-corpus path: repeated runs overwrite the same
-    # staging layout instead of accumulating one mkdtemp per call
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    path = os.path.join(tempfile.gettempdir(), f"etl_knlp_ivf_{tag}")
+    # per-corpus path under the validated cache root, keyed by the
+    # embeddings file's identity: repeated runs overwrite one layout
+    path = corpus_cache_path(sf_dir, "embeddings", "ivf_partitioned")
     ivf_write_partitioned(assigned, path)
     queries = query_set(assigned)
     stored = spark.read.parquet(path)

@@ -60,6 +60,11 @@ def parse_stage(spark: SparkSession, raw_dir: str, stage_dir: str) -> None:
     group, description), so cancelling or attributing the caller's
     group still covers these jobs. Waits for all three writes and
     re-raises the first error.
+
+    The session goes to ``inheritable_thread_target`` so that, with
+    pinned threads, the pool threads inherit its tags too. Unpinned,
+    PySpark returns the session itself, and the bare write function
+    runs instead.
     """
     hanjya = read_delimited(
         spark, os.path.join(raw_dir, "hanja.txt"), KOREAN_HANJYA_COLS, sep=":"
@@ -70,7 +75,8 @@ def parse_stage(spark: SparkSession, raw_dir: str, stage_dir: str) -> None:
     langlinks = read_tuple_burst(
         spark, os.path.join(raw_dir, "langlink.txt"), KOREAN_JAPANESE_COLS
     )
-    write = inheritable_thread_target(write_json_lines)
+    inherit = inheritable_thread_target(spark)
+    write = write_json_lines if inherit is spark else inherit(write_json_lines)
     staged = {"hanjya": hanjya, "titles": titles, "langlinks": langlinks}
     with ThreadPoolExecutor(max_workers=len(staged)) as pool:
         futures = [

@@ -81,6 +81,23 @@ def test_ivf_pruned_probe_matches_in_memory_and_prunes(spark, sf_dir):
     assert "dynamicpruning" in plan.lower()
 
 
+def test_ivf_pruned_corpus_is_staged_under_the_cache_root(spark, sf_dir):
+    """The partitioned corpus is a per-corpus artifact like the bm25
+    and PQ indexes: the probe reads it from under the validated cache
+    root (owner, mode and symlink checks), keyed by the embeddings
+    file's identity, not from a predictable name in the shared temp
+    dir."""
+    import os
+
+    from etl_knlp_spark import cache
+    from etl_knlp_spark.operators.ivf import ivf_pruned_topk
+
+    stored = cache.corpus_cache_path(sf_dir, "embeddings", "ivf_partitioned")
+    assert os.path.dirname(stored) == cache.secure_cache_root()
+    read = [f for f in ivf_pruned_topk(spark, sf_dir).inputFiles() if "cluster_id=" in f]
+    assert read and all(f.startswith(f"file://{stored}/cluster_id=") for f in read)
+
+
 def test_ivf_contract_booleans_hold(spark, sf_dir):
     """The registered driver-facing query is the assertion contract:
     5 per-query rows, recall/score/cardinality booleans all TRUE (the

@@ -177,6 +177,22 @@ def test_parse_stage_runs_with_unpinned_threads(spark, chunked_raw, tmp_path, mo
         assert files >= 3 and len(lines) == 25_000
 
 
+def test_parse_stage_warns_nothing_with_pinned_threads(spark, chunked_raw, tmp_path):
+    """In pinned-thread mode (PySpark's default, a py4j ClientServer)
+    parse_stage hands the session to inheritable_thread_target, so
+    PySpark does not warn that session tags will not be inherited."""
+    import warnings
+
+    from py4j.clientserver import ClientServer
+    from pyspark import SparkContext
+
+    assert isinstance(SparkContext._gateway, ClientServer)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        pipeline.parse_stage(spark, chunked_raw, str(tmp_path / "stage"))
+    assert [str(w.message) for w in caught if issubclass(w.category, UserWarning)] == []
+
+
 def test_load_tables_runs_no_spark_job(spark, chunked_raw, tmp_path):
     stage = str(tmp_path / "stage")
     pipeline.parse_stage(spark, chunked_raw, stage)
