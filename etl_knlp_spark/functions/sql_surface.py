@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import register_views
 from ..registry import query
+from .words import words_sql
 
 
 def run_sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
@@ -278,12 +279,12 @@ def sql_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     spark.sql(
         "CREATE OR REPLACE TEMPORARY FUNCTION tok_count(s STRING) "
-        "RETURNS INT RETURN size(split(trim(lower(s)), '\\\\s+'))"
+        f"RETURNS INT RETURN size({words_sql('s')})"
     )
     spark.sql(
         "CREATE OR REPLACE TEMPORARY FUNCTION terms_of(s STRING) "
         "RETURNS TABLE (term STRING) "
-        "RETURN SELECT explode(split(trim(lower(s)), '\\\\s+')) AS term"
+        f"RETURN SELECT explode({words_sql('s')}) AS term"
     )
     return spark.sql(
         """

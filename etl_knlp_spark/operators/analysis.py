@@ -4,6 +4,8 @@ quality-threshold filtering, token-length histograms.
 
 Everything stays in whole-stage codegen (regex/arithmetic column
 expressions, explode + aggregate); nothing collects to the driver.
+Text splits into words with the whitespace tokenizer of
+functions/words.py.
 """
 
 from __future__ import annotations
@@ -12,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.words import words
 from ..registry import query
 from ..sources.io import completion_marker_exists, write_completion_marker
 
@@ -97,7 +100,7 @@ def ngram_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank filter enables WindowGroupLimit: per-partition top-k heaps
     run before the lang shuffle."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    toks = words("text")
     grams = (
         docs.select("lang", toks.alias("toks"))
         .filter(F.size("toks") >= 2)
@@ -164,7 +167,7 @@ def quality_scored(docs: DataFrame) -> DataFrame:
     core of `doc_quality_filter` and `quality_threshold_sweep`
     (evaluation.py), kept in one place so both hash against the same
     declarative mirror expression."""
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    toks = words("text")
     base = docs.select("lang", "n_chars", toks.alias("toks"))
     n_tok = F.size("toks")
     n_stop = F.size(F.filter("toks", lambda x: x.isin("the", "a")))
@@ -222,7 +225,7 @@ def token_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document-length histogram in 10-token buckets — the sequence-
     length planning input for batch/context-size decisions."""
     docs = load_table(spark, sf_dir, "documents")
-    n_tok = F.size(F.split(F.trim(F.lower(F.col("text"))), r"\s+"))
+    n_tok = F.size(words("text"))
     return docs.groupBy(
         F.floor(n_tok / 10).cast("bigint").alias("tok_bucket")
     ).agg(F.count(F.lit(1)).alias("n_docs"))
@@ -264,7 +267,7 @@ def tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     term; the corpus count broadcasts as one row.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    toks = words("text")
     exploded = (
         docs.select("doc_id", toks.alias("toks"))
         .select(
@@ -324,7 +327,7 @@ def repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     across engines).
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    toks = words("text")
     base = docs.select("doc_id", toks.alias("t")).filter(F.size("t") >= 2)
     base = base.withColumn(
         "bg",
@@ -355,7 +358,7 @@ def winnow_fingerprints(docs: DataFrame) -> DataFrame:
     corpora against an independent pure-python construction
     (tests/test_properties.py, the BPE-sweep technique applied to the
     window family per round-7 verdict #7)."""
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    toks = words("text")
     base = docs.select("doc_id", toks.alias("t")).filter(
         F.size("t") >= _WINNOW_K
     )
@@ -471,7 +474,7 @@ def vocab_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalar, broadcast back. No full-vocabulary single-partition sort
     anywhere."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("token")
+    toks = F.explode(words("text")).alias("token")
     counts = (
         docs.select(toks)
         .filter(F.col("token") != "")
@@ -543,7 +546,7 @@ def inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    toks = words("text")
     base = docs.select("doc_id", F.explode(toks).alias("token")).repartition(
         "token"
     )
@@ -605,10 +608,10 @@ def bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     BASELINE.md round-1). Top-100 by (count, pair) is
     TakeOrdered-deterministic."""
     docs = load_table(spark, sf_dir, "documents")
-    words = docs.select(
-        F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("word")
-    ).filter(F.length("word") >= 2)
-    vocab = words.groupBy("word").agg(F.count(F.lit(1)).alias("c"))
+    word_rows = docs.select(F.explode(words("text")).alias("word")).filter(
+        F.length("word") >= 2
+    )
+    vocab = word_rows.groupBy("word").agg(F.count(F.lit(1)).alias("c"))
     pairs = vocab.select(
         "c",
         F.explode(F.sequence(F.lit(1), F.length("word") - 1)).alias("s"),
@@ -676,7 +679,7 @@ def lm_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines on the same rationals, AVG rounds at 4dp to absorb
     summation-order residue."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    toks = words("text")
     tdocs = docs.select("doc_id", toks.alias("t"))
     big = (
         tdocs.filter(F.size("t") >= 2)
@@ -758,7 +761,7 @@ def corpus_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical double identically on both engines: 0 disagreements on
     the same probe set."""
     docs = load_table(spark, sf_dir, "documents")
-    n_tok = F.size(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).cast("bigint")
+    n_tok = F.size(words("text")).cast("bigint")
     per_source = (
         docs.select("source", n_tok.alias("n_tokens"))
         .groupBy("source")
@@ -839,7 +842,7 @@ def _bm25_postings(docs: DataFrame):
     the index build (`bm25_index_build`), the full tf table over every
     term. Returns (tf, stats): (doc_id, term, tf, dl) postings and the
     one-row (n_docs, avgdl) corpus stats."""
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    toks = words("text")
     base = docs.select("doc_id", toks.alias("t")).select(
         "doc_id", "t", F.size("t").cast("bigint").alias("dl")
     )
@@ -914,7 +917,7 @@ def _bm25_scored_scan(docs: DataFrame, terms) -> DataFrame:
     column-pruned to doc_id/text), zero corpus-sized exchanges. The
     old plan shuffled every matching posting twice."""
     terms_sorted = sorted(terms)
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    toks = words("text")
     base = docs.select("doc_id", toks.alias("t")).select(
         "doc_id", "t", F.size("t").cast("bigint").alias("dl")
     )
@@ -1183,7 +1186,7 @@ def source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     twice and re-materializes every match; the oracle keeps that
     formulation because DuckDB lacks the HOF pair expansion)."""
     docs = load_table(spark, sf_dir, "documents")
-    t = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    t = words("text")
     sh = (
         docs.select("source", t.alias("t"))
         .filter(F.size("t") >= 3)
@@ -1287,7 +1290,7 @@ def oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "lang",
-        F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("term"),
+        F.explode(words("text")).alias("term"),
     )
     counts = toks.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
     # orderBy+limit plans as TakeOrderedAndProject (per-partition
@@ -1629,7 +1632,7 @@ def dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "doc_id",
         "lang",
-        F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("term"),
+        F.explode(words("text")).alias("term"),
     )
     vocab = toks.agg(F.count_distinct("term").alias("v"))
     raw_n = toks.agg(F.count(F.lit(1)).alias("rn"))
@@ -1675,7 +1678,7 @@ def dsir_importance_hashed(
     toks = docs.select(
         "doc_id",
         "lang",
-        F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("term"),
+        F.explode(words("text")).alias("term"),
     ).select("doc_id", "lang", bucket.alias("b"))
     vocab = toks.agg(F.count_distinct("b").alias("v"))
     raw_n = toks.agg(F.count(F.lit(1)).alias("rn"))
@@ -1844,11 +1847,9 @@ def _bpe_loop(docs: DataFrame, n_merges: int):
     """Run the distributed BPE loop; returns (merge rows, final vocab
     DataFrame (word, state, c)) — the state table `bpe_tokenize` joins
     the corpus against (and the mirror of the oracle's v{n} CTE)."""
-    words = docs.select(
-        F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("word")
-    )
+    word_rows = docs.select(F.explode(words("text")).alias("word"))
     vocab = (
-        words.groupBy("word")
+        word_rows.groupBy("word")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
         .select(
             "word",
@@ -1938,13 +1939,10 @@ def bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts hash-verify end to end."""
     docs = load_table(spark, sf_dir, "documents")
     _, vocab = _bpe_loop(docs, _BPE_N_MERGES)
-    words = docs.select(
-        "doc_id",
-        F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("word"),
-    )
+    word_rows = docs.select("doc_id", F.explode(words("text")).alias("word"))
     n_sym = F.size(F.split(F.trim(F.col("state")), " "))
     return (
-        words.join(vocab.select("word", "state"), "word")
+        word_rows.join(vocab.select("word", "state"), "word")
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_words"),
@@ -1998,7 +1996,7 @@ def lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     toks = docs.select(
         "source",
-        F.explode(F.split(F.trim(F.lower("text")), r"\s+")).alias("tok"),
+        F.explode(words("text")).alias("tok"),
     )
     counts = toks.groupBy("source", "tok").agg(F.count(F.lit(1)).alias("c"))
     return counts.groupBy("source").agg(
@@ -2094,7 +2092,7 @@ def collocation_lift(docs: DataFrame, min_count: int = 5) -> DataFrame:
     IEEE lift described there. Split out so the unit suite can pin
     hand-computed lifts on tiny corpora."""
     docs = docs.filter(F.length(F.trim("text")) > 0)
-    toks = docs.select(F.split(F.trim(F.lower("text")), r"\s+").alias("t"))
+    toks = docs.select(words("text").alias("t"))
     uni = toks.select(F.explode("t").alias("w"))
     ucnt = uni.groupBy("w").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     big = (
@@ -2229,9 +2227,7 @@ def rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(
         F.length(F.trim("text")) > 0
     )
-    toks = docs.select(
-        "doc_id", F.split(F.trim(F.lower("text")), r"\s+").alias("t")
-    )
+    toks = docs.select("doc_id", words("text").alias("t"))
     pos = toks.select("doc_id", F.posexplode("t").alias("pos", "w"))
     w_doc = Window.partitionBy("doc_id").orderBy("pos")
     ns = pos.filter(~F.col("w").isin(*_RAKE_STOPS)).withColumn(
@@ -2360,7 +2356,7 @@ def kneser_ney_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(
         F.length(F.trim("text")) > 0
     )
-    toks = docs.select(F.split(F.trim(F.lower("text")), r"\s+").alias("t"))
+    toks = docs.select(words("text").alias("t"))
     big = (
         toks.filter(F.size("t") >= 2)
         .select(

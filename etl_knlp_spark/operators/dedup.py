@@ -19,6 +19,9 @@ banding keys the shuffle on (band_idx, band_hash) whose cardinality is
 tunable via bands×rows; the brute-force n-gram/cosine joins exist as
 verifiers and small-blocking-group paths — LSH variants are the scale
 story.
+
+Word tokens and the hashed word-n-gram windows come from
+functions/words.py.
 """
 
 from __future__ import annotations
@@ -27,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.words import ngram_hash_array, ngram_hash_rows, words
 from ..registry import query
 
 
@@ -192,25 +196,9 @@ def capped_postings(
     plan tests can pin the broadcast-anti-join cap shape (a
     localCheckpoint truncates lineage, hiding the subtree from the
     final query's executed plan)."""
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-    # index-explode then hash each bigram to a long: the inverted index
-    # shuffles 8-byte keys, not gram strings, and the array expression
-    # is never inlined into Generate (see minhash_candidates note).
-    exploded = (
-        docs.select("doc_id", "lang", toks.alias("toks"))
-        .filter(F.size("toks") >= 2)
-        .select(
-            "doc_id",
-            "lang",
-            "toks",
-            F.explode(F.sequence(F.lit(1), F.size("toks") - F.lit(1))).alias("i"),
-        )
-        .select(
-            "doc_id",
-            "lang",
-            F.expr("xxhash64(element_at(toks, i), element_at(toks, i + 1))").alias("gh"),
-        )
-    )
+    # each bigram hashed to a long: the inverted index shuffles 8-byte
+    # keys, not gram strings
+    exploded = ngram_hash_rows(docs, 2, "doc_id", "lang")
     distinct_grams = exploded.dropDuplicates(["doc_id", "gh"])
     # Document-frequency cap via HOT-GRAM ANTI JOIN: aggregate per-gram
     # doc frequency (map-side partial aggregation — only distinct
@@ -497,17 +485,6 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---- MinHash + LSH --------------------------------------------------------
 
-# Word 3-gram shingles, hashed to longs immediately: ~60 shingles/doc
-# instead of ~400 char-5-grams (8× fewer lambda-fold steps in the
-# signature), and all downstream set math (bands, Jaccard verify)
-# operates on fixed-width longs instead of strings.
-_SHINGLE_HASHES_EXPR = """
-array_distinct(transform(
-  sequence(1, size(toks) - 2),
-  i -> xxhash64(element_at(toks, i), element_at(toks, i + 1), element_at(toks, i + 2))
-))
-"""
-
 # 32 minhash permutations; banded 8×4 for LSH. Each shingle is hashed
 # ONCE; the 32 "permutations" derive from fixed-width xxhash64(h, j)
 # combines evaluated inside whole-stage codegen (explode + min-agg),
@@ -518,12 +495,16 @@ _N_BANDS = _N_HASHES // _BAND_ROWS
 
 
 def _shingle_sets(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """(doc_id, shingle_hashes): distinct word-3-gram shingles as longs."""
-    toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
+    """(doc_id, shingle_hashes): distinct word-3-gram shingles as longs.
+    Word 3-grams hashed to longs immediately: ~60 shingles/doc instead
+    of ~400 char-5-grams (8× fewer lambda-fold steps in the signature),
+    and all downstream set math (bands, Jaccard verify) operates on
+    fixed-width longs instead of strings."""
+    toks = words(text_col)
     return (
         docs.select(F.col(id_col).alias("doc_id"), toks.alias("toks"))
         .filter(F.size("toks") >= 3)
-        .select("doc_id", F.expr(_SHINGLE_HASHES_EXPR).alias("shingle_hashes"))
+        .select("doc_id", F.array_distinct(ngram_hash_array(3)).alias("shingle_hashes"))
     )
 
 
@@ -538,11 +519,8 @@ def minhash_band_signatures(
     `incremental_minhash_screen` probes a new batch against the stored
     history copy without recomputing historical signatures.
 
-    NOTE the explode is over the cheap index sequence, not over the
-    shingle-hash array: Catalyst collapses a preceding projection INTO
-    Generate, so an inlined array-building expression would re-evaluate
-    per OUTPUT row (~60× the work — measured 20× slower at sf0.1).
-    Min is duplicate-insensitive, so no array_distinct is needed.
+    The shingle stream is `ngram_hash_rows`' exploded window; min is
+    duplicate-insensitive, so it is not deduplicated.
 
     Shuffle ordering (round-4 measurement): WITHOUT the explicit
     doc_id repartition, the groupBy's partial aggregation runs on
@@ -552,22 +530,7 @@ def minhash_band_signatures(
     stream by doc_id FIRST makes the aggregate partition-local: one
     exchange total, identical output, and the win grows with
     partition count."""
-    toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-    exploded = (
-        docs.select(F.col(id_col).alias("doc_id"), toks.alias("toks"))
-        .filter(F.size("toks") >= 3)
-        .select(
-            "doc_id",
-            "toks",
-            F.explode(F.sequence(F.lit(1), F.size("toks") - F.lit(2))).alias("i"),
-        )
-        .select(
-            "doc_id",
-            F.expr(
-                "xxhash64(element_at(toks, i), element_at(toks, i + 1), element_at(toks, i + 2))"
-            ).alias("h"),
-        )
-    )
+    exploded = ngram_hash_rows(docs, 3, F.col(id_col).alias("doc_id"), text=text_col, out="h")
     return _band_signatures_from_hashes(exploded)
 
 
@@ -989,7 +952,7 @@ def simhash_signatures(df: DataFrame, text_col: str = "text", id_col: str = "doc
     count, since the eliminated exchange's volume scales as docs ×
     partitions × lanes while the kept one is the flat token stream.
     """
-    toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
+    toks = words(text_col)
     # Explicit partition count (r15 optimization, guide §2.5): the
     # post-exchange stage is compute-dense per byte (distinct-token
     # dedup + 33 aggregates + the interpreted reassembly fold), but a
@@ -1193,21 +1156,7 @@ def decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc overlap count, threshold — is identical.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-    grams = (
-        docs.select("doc_id", toks.alias("toks"))
-        .filter(F.size("toks") >= 2)
-        .select(
-            "doc_id",
-            "toks",
-            F.explode(F.sequence(F.lit(1), F.size("toks") - F.lit(1))).alias("i"),
-        )
-        .select(
-            "doc_id",
-            F.expr("xxhash64(element_at(toks, i), element_at(toks, i + 1))").alias("gh"),
-        )
-        .dropDuplicates(["doc_id", "gh"])
-    )
+    grams = ngram_hash_rows(docs, 2, "doc_id").dropDuplicates(["doc_id", "gh"])
     bench = grams.filter(F.col("doc_id") < 50).select("gh").distinct()
     shared = (
         grams.filter(F.col("doc_id") >= 50)
@@ -1317,21 +1266,7 @@ def bloom_decontaminate(
     and the gap is false positives only.
     """
     spark = docs.sparkSession
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-    grams = (
-        docs.select("doc_id", toks.alias("toks"))
-        .filter(F.size("toks") >= 2)
-        .select(
-            "doc_id",
-            "toks",
-            F.explode(F.sequence(F.lit(1), F.size("toks") - F.lit(1))).alias("i"),
-        )
-        .select(
-            "doc_id",
-            F.expr("xxhash64(element_at(toks, i), element_at(toks, i + 1))").alias("gh"),
-        )
-        .dropDuplicates(["doc_id", "gh"])
-    )
+    grams = ngram_hash_rows(docs, 2, "doc_id").dropDuplicates(["doc_id", "gh"])
     bench = grams.filter(bench_pred(F.col("doc_id"))).select("gh").distinct()
     train_grams = grams.filter(~bench_pred(F.col("doc_id")))
 
@@ -1478,7 +1413,7 @@ def dedup_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     segment text. No driver state, no UDFs.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    toks = words("text")
     base = docs.select("doc_id", toks.alias("t")).filter(F.size("t") >= 1)
     n_seg = F.ceil(F.size("t") / float(_SEG_TOKENS)).cast("int")
     segs = base.select(
@@ -1586,25 +1521,7 @@ def jaccard_prefix_pairs(
     regimes are recorded in BASELINE.md (round-7 probe table).
     """
     from pyspark.sql import Window
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-    exploded = (
-        docs.select("doc_id", "lang", toks.alias("toks"))
-        .filter(F.size("toks") >= 2)
-        .select(
-            "doc_id",
-            "lang",
-            "toks",
-            F.explode(F.sequence(F.lit(1), F.size("toks") - F.lit(1))).alias("i"),
-        )
-        .select(
-            "doc_id",
-            "lang",
-            F.expr("xxhash64(element_at(toks, i), element_at(toks, i + 1))").alias(
-                "gh"
-            ),
-        )
-    )
-    grams = exploded.dropDuplicates(["doc_id", "gh"])
+    grams = ngram_hash_rows(docs, 2, "doc_id", "lang").dropDuplicates(["doc_id", "gh"])
     df_ct = grams.groupBy("lang", "gh").agg(F.count(F.lit(1)).alias("df_ct"))
     ranked = grams.join(df_ct, ["lang", "gh"])
     w_doc = Window.partitionBy("doc_id")
@@ -2245,10 +2162,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     the denominator changes — so the cap's recall economics
     (BASELINE.md round-5 sweep) carry over."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id",
-        F.split(F.trim(F.lower(F.col("text"))), r"\s+").alias("t"),
-    ).filter(F.size("t") >= 2)
+    toks = docs.select("doc_id", words("text").alias("t")).filter(F.size("t") >= 2)
     grams = toks.select(
         "doc_id",
         F.explode(
@@ -2316,7 +2230,7 @@ def _shingle_stream(
     aggregate + the position join — un-checkpointed, the corpus was
     scanned and exploded once per subtree); `substring_rewrite` feeds
     it to a single window and passes False."""
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    toks = words("text")
     stream = (
         docs.select("doc_id", toks.alias("toks"))
         .filter(F.size("toks") >= min_len)
@@ -2503,7 +2417,7 @@ def substring_rewrite(docs: DataFrame, min_len: int = _SUBSTR_MIN_TOKENS) -> Dat
         .dropDuplicates(["doc_id", "pos"])
         .withColumn("removed", F.lit(True))
     )
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    toks = words("text")
     positions = docs.select(
         "doc_id", F.posexplode(toks).alias("p0", "tok")
     ).select("doc_id", (F.col("p0") + 1).alias("pos"), "tok")
@@ -2833,9 +2747,7 @@ def lcs_span_pairs(
     from pyspark.sql import Window
 
     pairs = pairs.select("doc_a", "doc_b").localCheckpoint(eager=False)
-    toks = docs.select(
-        "doc_id", F.split(F.trim(F.lower(F.col("text"))), r"\s+").alias("t")
-    )
+    toks = docs.select("doc_id", words("text").alias("t"))
     ids = (
         pairs.select(F.col("doc_a").alias("doc_id"))
         .unionByName(pairs.select(F.col("doc_b").alias("doc_id")))
@@ -3053,7 +2965,7 @@ def dedup_bagofwords(spark: SparkSession, sf_dir: str) -> DataFrame:
     bow = F.md5(
         F.array_join(
             F.array_sort(
-                F.array_distinct(F.split(F.trim(F.lower("text")), r"\s+"))
+                F.array_distinct(words("text"))
             ),
             " ",
         )

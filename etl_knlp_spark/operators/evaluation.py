@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.words import words
 from ..registry import query
 from .analysis import _PPLX_ORACLE, lm_perplexity_filter, quality_scored
 from .text import _LANGID_ORACLE, langid_udf
@@ -437,7 +438,7 @@ def ndcg_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     argument), two per-term rank windows (WindowGroupLimit heaps),
     ≤10-element folds."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    toks = words("text")
     base = docs.select("doc_id", toks.alias("t")).select(
         "doc_id", "t", F.size("t").cast("bigint").alias("dl")
     )

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.words import words
 from ..registry import query
 
 DEFAULT_BUDGET = 256
@@ -54,7 +55,7 @@ def pack_sequences(docs: DataFrame, budget: int = DEFAULT_BUDGET) -> DataFrame:
     """Pack each language's documents (doc_id order) into sequences of
     at most ``budget`` whitespace tokens. Output: one row per doc with
     its (lang, seq_id) assignment and token count."""
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    toks = words("text")
     slim = docs.select(
         "doc_id", "lang", F.size(toks).cast("long").alias("n_tokens")
     )
@@ -132,7 +133,7 @@ def length_bucket_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     is doc_id order within bucket (swap in a hash of doc_id for an
     order-decorrelated but still reproducible shuffle)."""
     docs = load_table(spark, sf_dir, "documents")
-    n_tok = F.size(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).cast("bigint")
+    n_tok = F.size(words("text")).cast("bigint")
     bucketed = docs.select(
         "doc_id", n_tok.alias("n_tokens"), (n_tok / 32).cast("bigint").alias("bucket")
     )

@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.words import words
 from ..registry import query
 
 
@@ -179,7 +180,7 @@ def sample_importance_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     so even the float comparison is engine-portable and the kept set
     hash-verifies."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    toks = words("text")
     n_tok = F.size(toks)
     n_stop = F.size(F.filter(toks, lambda x: x.isin("the", "a")))
     quality = (
@@ -265,7 +266,7 @@ def budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     AQE, and the budget comparison is a scan over cumsums, not a
     driver loop."""
     docs = load_table(spark, sf_dir, "documents")
-    n_tok = F.size(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).cast("bigint")
+    n_tok = F.size(words("text")).cast("bigint")
     base = docs.select("doc_id", "source", "n_chars", n_tok.alias("n_tokens"))
     from pyspark.sql import Window
 
@@ -341,7 +342,7 @@ def sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(
         F.length(F.trim("text")) > 0
     )
-    n_tok = F.size(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).cast("bigint")
+    n_tok = F.size(words("text")).cast("bigint")
     keyed = docs.select(
         "doc_id",
         n_tok.alias("n_tokens"),

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.words import words
 from ..registry import query
 
 _D = 4  # hash rows
@@ -116,7 +117,7 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and the sketch build inside cms_estimate) would otherwise each
     # replay the scan + tokenize — the eval_prf_summary r7 lesson
     toks = docs.select(
-        F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("token")
+        F.explode(words("text")).alias("token")
     ).localCheckpoint(eager=False)
     exact = (
         toks.groupBy("token")
@@ -446,7 +447,7 @@ def mg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.filter(F.length(F.trim("text")) > 0).select(
-        F.explode(F.split(F.trim(F.lower("text")), r"\s+")).alias("tok")
+        F.explode(words("text")).alias("tok")
     )
     k = _MG_K
 

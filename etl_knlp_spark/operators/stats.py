@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.words import words
 from ..registry import query
 
 
@@ -521,7 +522,7 @@ def column_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     way `column_profile` does."""
     docs = load_table(spark, sf_dir, "documents")
     mid = docs.agg((F.max("doc_id") / 2).alias("mid"))
-    n_tok = F.size(F.split(F.trim(F.lower(F.col("text"))), r"\s+"))
+    n_tok = F.size(words("text"))
     tagged = docs.crossJoin(F.broadcast(mid)).select(
         F.when(F.col("doc_id") <= F.col("mid"), "baseline")
         .otherwise("candidate")
@@ -858,7 +859,7 @@ def token_weighted_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     token counts; ties inside a score value can't move the returned
     VALUE, so the answer is order-independent and exact."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    toks = words("text")
     n_tok = F.size(toks)
     n_stop = F.size(F.filter(toks, lambda x: x.isin("the", "a")))
     score = (

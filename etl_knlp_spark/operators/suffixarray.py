@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.words import words
 from ..registry import _REGISTRY, query
 from .dedup import _SUBSTR_MIN_TOKENS
 
@@ -350,7 +351,7 @@ def _span_hashes(docs: DataFrame, min_len: int) -> DataFrame:
         ).otherwise(F.array().cast("array<bigint>"))
         return frame.select("doc_id", hs2.alias("hs")).localCheckpoint(eager=False)
 
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    toks = words("text")
     cur = docs.select(
         "doc_id", F.transform(toks, lambda t: F.xxhash64(t)).alias("hs")
     )

@@ -6,10 +6,11 @@ expressions (split/regexp/higher-order functions inside whole-stage
 codegen); Python appears only in Arrow-batched pandas UDFs for the
 genuinely non-relational pieces (language-ID scoring), never row-at-a-time.
 
-Operators: per-language corpus stats, token counting (whitespace + a
-BPE-ish regex), quality scoring (length/punct/stopword ratios), document
-fingerprinting (normalized-text digest), language-ID (stopword-profile
-heuristic, pandas UDF), tokenizer UDF.
+Operators: per-language corpus stats, token counting (the whitespace
+tokenizer of functions/words.py + a BPE-ish regex), quality scoring
+(length/punct/stopword ratios), document fingerprinting
+(normalized-text digest), language-ID (stopword-profile heuristic,
+pandas UDF), tokenizer UDF.
 """
 
 from __future__ import annotations
@@ -21,10 +22,8 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from ..catalog import load_table
+from ..functions.words import words
 from ..registry import query
-
-_TOKENS = lambda c: F.split(F.trim(F.lower(c)), r"\s+")  # noqa: E731
-
 
 @query(
     "text_stats",
@@ -48,7 +47,7 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tokenize once in the projection; the two aggregates then read the
     # precomputed count instead of re-splitting the text per aggregate
     base = docs.select(
-        "lang", "n_chars", F.size(_TOKENS(F.col("text"))).alias("n_tokens")
+        "lang", "n_chars", F.size(words("text")).alias("n_tokens")
     )
     # integer averages unrounded: exact sums (< 2^53) ÷ same count →
     # identical doubles on both engines (see window_percent_rank note)
@@ -76,7 +75,7 @@ def token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
-        F.size(_TOKENS(F.col("text"))).alias("n_ws_tokens"),
+        F.size(words("text")).alias("n_ws_tokens"),
         F.size(
             F.regexp_extract_all(F.lower("text"), F.lit(r"[a-z]+|[0-9]+|[^a-z0-9\s]"), 0)
         ).alias("n_bpe_tokens"),
@@ -108,7 +107,7 @@ def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     of exact ints stay UNROUNDED: IEEE division is engine-identical,
     while round-half boundaries are not (see window_percent_rank)."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = _TOKENS(F.col("text"))
+    toks = words("text")
     base = docs.select("doc_id", "n_chars", toks.alias("toks"))
     n_tok = F.size("toks")
     n_stop = F.size(F.filter("toks", lambda x: x.isin("the", "a")))

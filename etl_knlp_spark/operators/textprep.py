@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.words import words
 from ..registry import query
 from .sampling import hash_bucket
 
@@ -272,7 +273,7 @@ def readability_flesch(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(
         F.length(F.trim("text")) > 0
     )
-    words = F.split(F.trim(F.lower("text")), r"\s+")
+    toks = words("text")
     ns = F.size(
         F.filter(
             F.regexp_extract_all("text", F.lit(r"[^.!?]+[.!?]*"), 0),
@@ -281,7 +282,7 @@ def readability_flesch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     nsyl = F.aggregate(
         F.transform(
-            words,
+            toks,
             lambda w: F.greatest(
                 F.lit(1), F.size(F.regexp_extract_all(w, F.lit("[aeiouy]+"), 0))
             ),
@@ -291,7 +292,7 @@ def readability_flesch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     counted = docs.select(
         "doc_id",
-        F.size(words).cast("bigint").alias("n_words"),
+        F.size(toks).cast("bigint").alias("n_words"),
         F.greatest(F.lit(1), ns).cast("bigint").alias("n_sentences"),
         nsyl.cast("bigint").alias("n_syllables"),
     )

@@ -12,8 +12,8 @@ equal, the house rule for iterative kernels).
 Deterministic semantics (mirrored bit-for-bit by the pure-python
 construction in tests/test_properties.py):
 
-1. words: lowercase, split on whitespace, drop empties; per-word
-   corpus frequency c_w (the same prep as the BPE loop).
+1. words: the whitespace tokenizer (functions/words.py), empties
+   dropped; per-word corpus frequency c_w (the same prep as the BPE loop).
 2. seed: every (start, len≤max_piece_len) substring slot of every
    word, weighted by c_w (overlapping occurrences each count). ALL
    single characters enter the seed; multi-char pieces take the top
@@ -72,6 +72,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.words import words
 from ..registry import query
 
 _MAX_PIECE_LEN = 4
@@ -85,11 +86,7 @@ def _word_counts(docs: DataFrame) -> DataFrame:
     """(word, c): distinct words with corpus frequencies — BPE's prep
     (analysis.py:1665) plus an empty-word guard."""
     return (
-        docs.select(
-            F.explode(
-                F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-            ).alias("word")
-        )
+        docs.select(F.explode(words("text")).alias("word"))
         .filter(F.col("word") != "")
         .groupBy("word")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
@@ -401,12 +398,9 @@ def unigram_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     _, _, _, segmented = train_unigram(docs)
 
-    stream = docs.select(
-        "doc_id",
-        F.explode(
-            F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-        ).alias("word"),
-    ).filter(F.col("word") != "")
+    stream = docs.select("doc_id", F.explode(words("text")).alias("word")).filter(
+        F.col("word") != ""
+    )
     joined = stream.join(
         segmented.select("word", "pieces"), "word"
     )

@@ -13,8 +13,8 @@ with a frozen 30k-entry vocab; nothing is trained in the hot path.
 Semantics (deterministic, mirrored by the DuckDB oracle and by the
 pure-python construction in tests/test_properties.py):
 
-1. words: lowercase, whitespace-split, empties dropped; per-doc word
-   positions kept (the per-doc signature is order-sensitive).
+1. words: the whitespace tokenizer (functions/words.py), empties
+   dropped; per-doc word positions kept (the per-doc signature is order-sensitive).
 2. vocab induction (the deterministic stand-in for a shipped vocab —
    both engines derive it identically from corpus statistics): every
    word-initial substring of length ≤ `max_piece_len` enters as
@@ -52,6 +52,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.words import words
 from ..registry import query
 
 _MAX_PIECE_LEN = 4
@@ -67,9 +68,7 @@ def _word_stream(docs: DataFrame) -> DataFrame:
     """(doc_id, pos, word): position-keyed word stream — empties are
     dropped BEFORE posexplode so positions match the oracle's
     list_filter-then-ordinality numbering."""
-    arr = F.filter(
-        F.split(F.trim(F.lower(F.col("text"))), r"\s+"), lambda w: w != ""
-    )
+    arr = F.filter(words("text"), lambda w: w != "")
     return docs.select("doc_id", F.posexplode(arr).alias("pos", "word"))
 
 

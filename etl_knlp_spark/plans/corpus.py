@@ -26,27 +26,24 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.words import words
 from ..operators.packing import DEFAULT_BUDGET, pack_sequences
 from ..registry import query
-
-
-def _toks(col: str = "text"):
-    return F.split(F.trim(F.lower(F.col(col))), r"\s+")
 
 
 def clean_docs(docs: DataFrame, min_tokens: int = 5) -> DataFrame:
     """Stage 1 — drop null/degenerate docs (README.md:15's "NA rows
     are removed" plus a minimum-length floor)."""
     return docs.filter(
-        F.col("text").isNotNull() & (F.size(_toks()) >= min_tokens)
+        F.col("text").isNotNull() & (F.size(words("text")) >= min_tokens)
     )
 
 
 def quality_filter(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     """Stage 2 — heuristic quality gate (same signal family as
     `doc_quality_filter`: length saturation + stopword density)."""
-    n_tok = F.size(_toks())
-    n_stop = F.size(F.filter(_toks(), lambda x: x.isin("the", "a")))
+    n_tok = F.size(words("text"))
+    n_stop = F.size(F.filter(words("text"), lambda x: x.isin("the", "a")))
     quality = (
         F.least(F.col("n_chars") / 500.0, F.lit(1.0)) * 0.5
         + F.least(n_stop * 5.0 / n_tok, F.lit(1.0)) * 0.5

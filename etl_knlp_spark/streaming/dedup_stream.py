@@ -40,24 +40,20 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.words import ngram_hash_array, words
 from ..operators.dedup import _BAND_ROWS, _N_BANDS, _N_HASHES
 from ..registry import query
 
-# Per-row signature pipeline, spliced into one SQL expression chain so
+# Per-row signature pipeline, spliced into one expression chain so
 # the whole thing stays a single stateless projection:
-#   toks     — lowercased whitespace tokens
-#   hs       — word-3-gram shingle hashes (same xxhash64 combine as
-#              _SHINGLE_HASHES_EXPR; no array_distinct — min is
-#              duplicate-insensitive)
+#   toks     — `functions.words` tokens
+#   hs       — word-3-gram shingle hashes (`ngram_hash_array(3)`, the
+#              batch builder's xxhash64 combine; no array_distinct —
+#              min is duplicate-insensitive)
 #   mh_j     — array_min over xxhash64(h, j), j an int literal exactly
 #              like the batch builder's F.lit(j) (type-identical
 #              hashing)
 #   band_b   — xxhash64 over its 4 minhashes
-_TOKS = r"split(trim(lower(text)), '\\s+')"
-_HS = (
-    "transform(sequence(1, size(toks) - 2),"
-    " i -> xxhash64(element_at(toks, i), element_at(toks, i + 1), element_at(toks, i + 2)))"
-)
 
 
 def _mh_expr(j: int) -> str:
@@ -80,9 +76,9 @@ def row_band_signatures(
     the batch builder's `size(toks) >= 3` filter."""
     sigs = (
         docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
-        .withColumn("toks", F.expr(_TOKS))
+        .withColumn("toks", words("text"))
         .filter(F.size("toks") >= 3)
-        .withColumn("hs", F.expr(_HS))
+        .withColumn("hs", ngram_hash_array(3))
         .select(
             "doc_id",
             *[F.expr(_mh_expr(j)).alias(f"mh{j}") for j in range(_N_HASHES)],

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entry_mod
@@ -27,7 +29,6 @@ def test_entry_hash_matches_registered_q1_oracle(spark, sf_dir):
     passed because the flagship emits no float or timestamp
     columns)."""
     import importlib.util
-    import os
 
     import duckdb
 
@@ -90,7 +91,7 @@ def test_registry_importable_without_session():
         [sys.executable, "-c", code],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         timeout=120,
     )
     assert out.returncode == 0, out.stderr[-2000:]

@@ -11,6 +11,8 @@ rows-only query survives the driver's exact canonicalization step.
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 import pytest
 from pyspark.sql import types as T
@@ -73,7 +75,7 @@ def test_bench_harness_contract(spark):
     import importlib
     import sys as _sys
 
-    _sys.path.insert(0, "/root/repo")
+    _sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     bench = importlib.import_module("bench")
     registry._load_all()
     missing = [n for n in bench.HEADLINE if n not in registry._REGISTRY]

@@ -1416,3 +1416,60 @@ def test_cross_module_hop_covers_the_live_ordered_sum_precedent():
         "ivf._ordered_sum's source is not among bm25_pruned's scan sides — "
         "the cross-module hop lost the live precedent it was built for"
     )
+
+
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# Spellings of the whitespace tokenizer and of the hashed word-n-gram
+# window; `functions/words.py` is their one owner.
+_WORD_VOCABULARY_COPIES = (
+    "F.split(F.trim(F.lower(",
+    "split(trim(lower(",
+    "xxhash64(element_at(toks",
+)
+
+
+def _py_files(*subdirs: str):
+    for sub in subdirs:
+        for dirpath, _, files in os.walk(os.path.join(_ROOT, sub)):
+            for f in sorted(files):
+                if f.endswith(".py"):
+                    yield os.path.join(dirpath, f)
+
+
+def test_word_vocabulary_has_one_owner():
+    """Every query splits text into words the same way and hashes word
+    n-grams the same way, so those expressions are written once, in
+    `functions/words.py`; a copy anywhere else in the package can drift
+    from it unseen."""
+    owner = os.path.join(_ROOT, "etl_knlp_spark", "functions", "words.py")
+    copies = []
+    for path in _py_files("etl_knlp_spark"):
+        if path == owner:
+            continue
+        with open(path) as f:
+            for lineno, line in enumerate(f, 1):
+                copies += [
+                    f"{os.path.relpath(path, _ROOT)}:{lineno}: {pat}"
+                    for pat in _WORD_VOCABULARY_COPIES
+                    if pat in line
+                ]
+    assert not copies, (
+        "tokenizer or word-n-gram hash written outside functions/words.py "
+        "(call words / words_sql / ngram_hash_rows / ngram_hash_array "
+        "instead):\n" + "\n".join(copies)
+    )
+
+
+def test_tools_and_tests_do_not_name_the_checkout_path():
+    """Tools and tests find the package relative to their own file, so
+    a sweep started in a second checkout (say, the parent's, for an
+    A/B) imports and grades that checkout's package, not this one."""
+    testdata = os.path.dirname(registry._SWEEP_SF_DIR)  # a fixed path by design
+    named = []
+    for path in _py_files("tools", "tests"):
+        with open(path) as f:
+            text = f.read().replace(testdata, "")
+        if _ROOT in text:
+            named.append(os.path.relpath(path, _ROOT))
+    assert not named, f"these files hard-code the checkout path {_ROOT}: {named}"

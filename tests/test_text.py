@@ -58,8 +58,6 @@ def test_fingerprint_invariant_to_whitespace(spark, sf_dir):
     respaced = docs.select(
         "doc_id", F.regexp_replace("text", " ", "   ").alias("text")
     )
-    from etl_knlp_spark.operators.text import _TOKENS  # noqa: F401  (module import check)
-
     refp = respaced.select(
         "doc_id",
         F.md5(F.trim(F.regexp_replace(F.lower("text"), r"\s+", " "))).alias("fp"),

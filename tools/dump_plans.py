@@ -7,9 +7,11 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from etl_knlp_spark import registry  # noqa: E402
 from etl_knlp_spark.session import get_spark  # noqa: E402
@@ -535,7 +537,7 @@ def main() -> None:
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
         out += [f"## {name}", "", why, "", "```", buf.getvalue().rstrip(), "```", ""]
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md ({len(SHOWCASE)} plans)")
 

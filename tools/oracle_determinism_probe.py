@@ -25,17 +25,15 @@ Usage:
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 import traceback
 
-import duckdb
-
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from etl_knlp_spark import registry  # noqa: E402
-from etl_knlp_spark.catalog import TABLES, table_path  # noqa: E402
-from verify_oracles import value_hash  # noqa: E402  (same canon as the gate)
+from verify_oracles import oracle_connection, value_hash  # noqa: E402  (same canon as the gate)
 
 
 def probe(
@@ -59,23 +57,12 @@ def probe(
         t0 = time.time()
         try:
             for _ in range(runs):
-                con = duckdb.connect()  # fresh connection: fresh morsel state
-                con.sql("SET threads=32")
-                for t in TABLES:
-                    con.sql(
-                        f"CREATE VIEW {t} AS SELECT * FROM "
-                        f"'{table_path(sf_dir, t)}'"
-                    )
+                # fresh connection: fresh morsel state
+                con = oracle_connection(sf_dir, threads=32)
                 h = value_hash(con.sql(sql).df())
                 hashes[h] = hashes.get(h, 0) + 1
                 con.close()
-            con = duckdb.connect()
-            con.sql("SET threads=1")
-            for t in TABLES:
-                con.sql(
-                    f"CREATE VIEW {t} AS SELECT * FROM "
-                    f"'{table_path(sf_dir, t)}'"
-                )
+            con = oracle_connection(sf_dir, threads=1)
             h1 = value_hash(con.sql(sql).df())
             con.close()
         except Exception:

@@ -17,7 +17,7 @@ import traceback
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from etl_knlp_spark import registry  # noqa: E402
 from etl_knlp_spark.catalog import TABLES, table_path  # noqa: E402
@@ -65,23 +65,25 @@ def value_hash(df: pd.DataFrame) -> str:
     return hashlib.md5(canon(df).to_csv(index=False).encode()).hexdigest()
 
 
+def oracle_connection(sf_dir: str, threads: int | None = None) -> duckdb.DuckDBPyConnection:
+    """A fresh DuckDB connection with one view per catalog table over
+    `sf_dir`'s parquet. `threads` pins DuckDB's thread count; None keeps
+    the library default, which is what the driver's gate runs at."""
+    con = duckdb.connect()
+    if threads is not None:
+        con.sql(f"SET threads={int(threads)}")
+    for t in TABLES:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{table_path(sf_dir, t)}'")
+    return con
+
+
 def run_sweep(spark, sf_dir: str, only: set[str] | None = None) -> list[str]:
     """Run every registered query on the GIVEN session and compare
     against its DuckDB oracle; returns the failure list. Split out of
     main() so tools/determinism_probe.py can drive the identical
     comparison under a deliberately perturbed session."""
     only = only or set()
-    con = duckdb.connect()
-    # ORACLE_THREADS: environment-epoch drill knob (r14 verdict #6) —
-    # run the whole oracle side single-threaded (or any thread count)
-    # to measure sensitivity to DuckDB's parallel morsel folds. The
-    # driver's own gate runs at the library default.
-    threads = os.environ.get("ORACLE_THREADS")
-    if threads:
-        con.sql(f"SET threads={int(threads)}")
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{table_path(sf_dir, t)}'")
-
+    con = oracle_connection(sf_dir)
     qs, oracles = registry.all_queries(), registry.all_oracles()
     failures = []
     for name, fn in sorted(qs.items()):
