@@ -112,11 +112,40 @@ def test_waiters_cohere_with_overrun_under_non_prefix_demand():
     assert len(pw2["waiters"]) == pw2["overrun"]
 
 
+# Overruns accepted in review, keyed by the window they apply to, so
+# each one lapses once that round's CORRECTNESS rows land.
+#
+# r17: moving the whitespace tokenizer behind functions/words.py
+# changed the source of 35 query bodies, and tools/snapshot_oracles.py
+# moved their staleness bars to r17: 44 unevidenced + 29 overdue = 73
+# mandatory queries against 50 slots. The optimized plans of all 300
+# queries did not change, so those 35 queries have valid rows in
+# substance; the snapshot cannot say so until it has a plan-neutral
+# gate (ROADMAP item 7), and splitting the refactor across rounds
+# would leave the tokenizer with two owners in between. The 23 waiters
+# below all hold r10 evidence and none runs the tokenizer; each ages
+# one round past the six-round bound (age 7 at r17).
+_ACCEPTED_WAITERS = {
+    17: frozenset({
+        "spearman_corr", "kendall_tau", "html_strip", "text_normalize",
+        "url_domain_counts", "shuffle_shard", "map_ops", "agg_skew_salted",
+        "layout_bucketed_join", "layout_zorder", "time_travel_read",
+        "compact_small_files", "q18_large_orders", "q4_priority_check",
+        "q12_late_priority", "q13_order_distribution",
+        "q21_waiting_suppliers", "cdc_merge", "stream_static_enrich",
+        "stream_stateful_totals", "stream_dedup_watermark",
+        "stream_topk_trending", "rollup_hierarchical_time",
+    }),
+}
+
+
 def test_live_registry_precheck_runs_clean():
     """The pre-check runs against the real registry and its current
     evidence without raising; the current demand must never silently
     exceed the budget (if this fails, the round's first job is to
-    re-plan the window, not to ship more conversions)."""
+    re-plan the window, not to ship more conversions). The only
+    waiters allowed are those `_ACCEPTED_WAITERS` names for the next
+    round."""
     from etl_knlp_spark import registry
 
     tool = _tool()
@@ -126,9 +155,11 @@ def test_live_registry_precheck_runs_clean():
     order = registry._sweep_order()
     fresh = {n: tool.freshest_valid(n, evidence, bars) for n in order}
     pw = tool.project_window(order, fresh)
-    assert pw["overrun"] == 0, (
+    accepted = _ACCEPTED_WAITERS.get(pw["next_round"], frozenset())
+    unaccepted = [n for n in pw["waiters"] if n not in accepted]
+    assert not unaccepted, (
         f"the next driver window cannot cover the mandatory demand: "
-        f"{pw['waiters']} would age past the rotation bound — re-plan "
+        f"{unaccepted} would age past the rotation bound — re-plan "
         "before adding conversions. If the overrun is a DELIBERATE "
         "tradeoff (r13 accepted one to convert two live hazards), "
         "relax this assert in the same commit with the named waiter "
